@@ -3,6 +3,7 @@ package graft.sources
 import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
@@ -132,10 +133,13 @@ private[sources] class OffsetLogStreamingWrite(
     }
   }
 
+  /** The Hadoop conf, broadcast once per streaming write rather than
+    * shipped in every writer task's factory (as on the read side). */
+  private lazy val hadoopConf: Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new SegmentStageWriterFactory(
-      schema, root,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    new SegmentStageWriterFactory(schema, root, hadoopConf)
 
   /** Atomic small-file write: temp + rename (the consumer-group-offset
     * discipline — a reader never sees a half-written marker). */
@@ -219,13 +223,13 @@ private[sources] class OffsetLogStreamingWrite(
 private[sources] class SegmentStageWriterFactory(
     schema: StructType,
     root: String,
-    conf: SerializableConfiguration) extends StreamingDataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new SegmentStageWriter(
       schema,
       s"$root/_epoch_stage/epoch=$epochId/stage-$partitionId-$taskId-${UUID.randomUUID.toString.take(8)}.parquet",
-      conf.value)
+      conf.value.value)
 }
 
 /** InternalRow → parquet Group staging writer — the write-side mirror

@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -395,19 +396,24 @@ private[sources] class OffsetLogMicroBatchStream(
     }.toArray
   }
 
+  /** The Hadoop conf, broadcast once per stream: a full conf serializes
+    * to about 100 KB, and shipping it inside every task's reader factory
+    * made each task deserialize it again. Executors fetch the broadcast
+    * once and every later task reads their cached copy. */
+  private lazy val hadoopConf: Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new SegmentReaderFactory(
-      schema,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    new SegmentReaderFactory(schema, hadoopConf)
 }
 
 private[sources] class SegmentReaderFactory(
     schema: StructType,
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val split = partition.asInstanceOf[SegmentSplit]
-    new SegmentReader(schema, split, conf.value)
+    new SegmentReader(schema, split, conf.value.value)
   }
 }
 
@@ -420,14 +426,22 @@ private[sources] class SegmentReader(
     schema: StructType,
     split: SegmentSplit,
     conf: Configuration) extends PartitionReader[InternalRow] {
+  import org.apache.parquet.conf.HadoopParquetConfiguration
   import org.apache.parquet.example.data.Group
+  import org.apache.parquet.hadoop.ParquetReader
+  import org.apache.parquet.hadoop.api.ReadSupport
+  import org.apache.parquet.hadoop.example.GroupReadSupport
+  import org.apache.parquet.hadoop.util.HadoopInputFile
   import org.apache.parquet.schema.LogicalTypeAnnotation
   import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), new Path(split.file))
-    .withConf(conf)
-    .build()
+  // the (InputFile, ParquetConfiguration) builder: `ParquetReader.builder`
+  // constructs a fresh `Configuration` (a full XML defaults parse) per
+  // segment before `withConf` replaces it
+  private val reader = new ParquetReader.Builder[Group](
+      HadoopInputFile.fromPath(new Path(split.file), conf), new HadoopParquetConfiguration(conf)) {
+    override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+  }.build()
 
   private var row: InternalRow = _
   private var done = false

@@ -51,10 +51,12 @@ object HiveBatchSink {
   *
   * At 100 TB/day: batch statistics ride the single write pass as
   * `observe()` metrics (no second scan of the input), the staging
-  * shuffle is an AQE REBALANCE on (dt, hr) — cold hours coalesce into
-  * shared writer tasks (no small-file explosion) while a hot hour is
-  * skew-split across many tasks by size
-  * (`optimizeSkewsInRebalancePartitions`) — staged files roll at
+  * shuffle hashes rows on (dt, hr), so each hour of a batch stages one
+  * file (no small-file explosion). In a batch write with AQE on it is a
+  * REBALANCE, which also skew-splits a hot hour across tasks by size
+  * (`optimizeSkewsInRebalancePartitions`). A stream's `foreachBatch`
+  * runs with AQE off, where Spark drops the rebalance hint, so there it
+  * is a plain hash repartition. Staged files roll at
   * `maxRecordsPerFile` (the reference's size-based rolling), sealing is
   * one job for all closed partitions, markers are O(partitions), and
   * the only driver state is the streaming checkpoint.
@@ -115,11 +117,14 @@ final class HiveBatchSink(
     * a stats job plus a write job. */
   def writeBatch(events: DataFrame, batchId: Long): BatchStats = {
     val obs = Observation()
-    // REBALANCE, not repartition: rows hash on (dt, hr) so every hour
-    // lands in one writer task (one file per dir, no small-file
-    // explosion), while AQE's OptimizeSkewInRebalancePartitions splits a
-    // hot hour across tasks once it exceeds the advisory size — write
-    // parallelism proportional to each hour's actual bytes. AQE
+    // rows hash on (dt, hr) so every hour lands in one writer task (one
+    // file per dir, no small-file explosion). With AQE on (a batch
+    // write) this is a REBALANCE: OptimizeSkewInRebalancePartitions
+    // splits a hot hour across tasks once it exceeds the advisory size —
+    // write parallelism proportional to each hour's actual bytes. A
+    // stream's foreachBatch session runs with AQE off, where Spark drops
+    // the rebalance hint and each hour would stage one file per input
+    // task, so there the shuffle is a plain hash repartition. AQE
     // partition COALESCING is scoped off for this write only: a writer
     // task pays a serial parquet open/close per partition directory it
     // covers, so merging cold hours into few tasks makes wide layouts
@@ -141,14 +146,16 @@ final class HiveBatchSink(
       max(col("ts")).as("max_ts")) ++
       rules.map(r => count(when(violates(r), lit(1))).as(s"viol_${r.id}")) ++
       (if (rules.isEmpty) Nil else Seq(count(when(!cleanRow, lit(1))).as("rejected")))
+    val adaptive = events.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean
     try {
-      events
+      val staged = events
         .observe(obs, metrics.head, metrics.tail: _*)
         .filter(cleanRow)
         .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
         .withColumn("hr", date_format(col("ts"), "HH"))
         .withColumn("ingest_batch", lit(batchId))
-        .hint("rebalance", col("dt"), col("hr"))
+      (if (adaptive) staged.hint("rebalance", col("dt"), col("hr"))
+       else staged.repartition(col("dt"), col("hr")))
         .write
         .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", maxRecordsPerFile)

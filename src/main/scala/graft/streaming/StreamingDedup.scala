@@ -19,10 +19,16 @@ object StreamingDedup {
   private[streaming] def contentFingerprint(contentCols: Seq[String]) =
     md5(concat_ws("\u0001", contentCols.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*))
 
+  /** Id dedup. On batch input (a one-shot load or backfill) there is no
+    * watermark horizon — the whole input is one window — so it is a
+    * plain `dropDuplicates` on the id, and batch and stream callers share
+    * this one call. */
   def dedup(stream: DataFrame, idCol: String = "event_id", watermark: String = "1 hour"): DataFrame =
-    stream
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCol)
+    if (!stream.isStreaming) stream.dropDuplicates(idCol)
+    else
+      stream
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark(idCol)
 
   /** Content dedup AT INGEST — the streaming half of the exact-dedup
     * pass (q33): key the dedup state on a payload fingerprint instead of

@@ -309,6 +309,81 @@ class OffsetLogSourceSpec extends SparkSpec {
       s"failOnDataLoss=false must skip the hole and read tranche 3's 40 rows, got ${seen.size - consumed}")
   }
 
+  test("the reader factory shipped in every task carries no Hadoop conf") {
+    import org.apache.spark.sql.connector.catalog.SupportsRead
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val logRoot = Files.createTempDirectory("graft-dsv2-ser").toString
+    OffsetLog.append(spark, logRoot, Tables(spark, sfDir).events.limit(20), "user_id", P)
+    val provider = new OffsetLogSourceProvider
+    val opts = new CaseInsensitiveStringMap(java.util.Map.of("path", logRoot, "numPartitions", P.toString))
+    val stream = provider.getTable(provider.inferSchema(opts), Array.empty, opts)
+      .asInstanceOf[SupportsRead].newScanBuilder(opts).build()
+      .toMicroBatchStream(Files.createTempDirectory("graft-dsv2-ser-ck").toString)
+    def javaSerializedBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(o) finally out.close()
+      bytes.size()
+    }
+    val factoryBytes = javaSerializedBytes(stream.createReaderFactory())
+    assert(factoryBytes < 4096, s"reader factory serializes to $factoryBytes bytes")
+    // the bound discriminates: the conf alone does not fit under it
+    val confBytes = javaSerializedBytes(
+      new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    assert(confBytes > 4096, s"Hadoop conf serializes to only $confBytes bytes")
+    stream.stop()
+  }
+
+  test("micro-batches clamped mid-segment over several partitions return exactly readBatch's rows") {
+    val logRoot = Files.createTempDirectory("graft-dsv2-clamp").toString
+    val events = Tables(spark, sfDir).events
+    // two append waves: every partition holds two segments
+    OffsetLog.append(spark, logRoot, events.limit(150), "user_id", P)
+    OffsetLog.append(spark, logRoot, events.exceptAll(events.limit(150)).limit(150), "user_id", P)
+    val head = OffsetLog.endOffsets(spark, logRoot, P)
+    val cols = ("partition" +: events.columns.toSeq :+ "offset").map(col)
+    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
+    val q = spark.readStream.format(fmt)
+      .option("path", logRoot)
+      .option("numPartitions", P.toString)
+      .option("maxRowsPerTrigger", "70") // not a multiple of any segment size
+      .load()
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-dsv2-clamp-ck").toString)
+      .foreachBatch { (b: DataFrame, id: Long) => batches.put(id, b.select(cols: _*).collect()); () }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(180000)
+
+    def offsets(json: String): Map[Int, Long] =
+      "\"(\\d+)\":(\\d+)".r.findAllMatchIn(json).map(m => m.group(1).toInt -> m.group(2).toLong).toMap
+    val ranges = q.recentProgress.filter(_.numInputRows > 0).map { pr =>
+      (pr.batchId, Option(pr.sources.head.startOffset).fold(Map.empty[Int, Long])(offsets),
+        offsets(pr.sources.head.endOffset))
+    }
+    assert(ranges.length >= 4, s"300 rows at 70 per trigger must take >=4 batches, got ${ranges.length}")
+    import scala.jdk.CollectionConverters._
+    assert(batches.asScala.collect { case (id, rows) if rows.nonEmpty => id.toLong }.toSet ==
+      ranges.map(_._1).toSet)
+    val f = new org.apache.hadoop.fs.Path(logRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val SegRe = "segment-(\\d+)-(\\d+)\\.parquet".r
+    val boundaries = (0 until P).map { p =>
+      p -> f.listStatus(new org.apache.hadoop.fs.Path(s"$logRoot/partition=$p")).map(_.getPath.getName)
+        .collect { case SegRe(s0, n0) => Set(s0.toLong, s0.toLong + n0.toLong) }.flatten.toSet
+    }.toMap
+    assert(ranges.exists { case (_, _, end) => end.exists { case (p, e) => !boundaries(p).contains(e) } },
+      "no batch ended mid-segment; the fixture does not exercise clamping")
+    assert(ranges.last._3 == head, s"the stream stopped at ${ranges.last._3}, not the head $head")
+    ranges.foreach { case (id, from, until) =>
+      val expected = OffsetLog.readBatch(spark, logRoot, P, from, until)
+        .withColumn("partition", col("partition").cast("int")).select(cols: _*)
+      val got = spark.createDataFrame(java.util.Arrays.asList(batches.get(id): _*), expected.schema)
+      assert(got.count() == expected.count() &&
+        got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"batch $id over [$from, $until) differs from readBatch")
+    }
+  }
+
   test("empty log: attaching a consumer before the first append is caught-up, not an error") {
     val logRoot = Files.createTempDirectory("graft-dsv2-log4").toString
     new java.io.File(logRoot).mkdirs()

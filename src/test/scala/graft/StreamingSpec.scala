@@ -117,6 +117,31 @@ class StreamingSpec extends SparkSpec {
     assert(stagedFiles(unrolled) == 1, s"expected 1 file without rolling, got ${stagedFiles(unrolled)}")
   }
 
+  test("sink in a stream: every (hour, batch) stages exactly one file although foreachBatch runs with AQE off") {
+    val in = tmp(); val root = tmp(); val ckpt = tmp()
+    // three hours, each spread over every input file and, after the
+    // ingest pipeline's dedup, over every state partition: a write
+    // without its own shuffle on (dt, hr) stages one file per hour per
+    // upstream task
+    val threeHours = t.events
+      .withColumn("ts", (lit(1709287200L) + col("event_id") % 3 * 3600L + col("event_id") % 600L)
+        .cast("timestamp"))
+    threeHours.repartition(8).write.mode("overwrite").parquet(in)
+    // lateness past the data's span: nothing seals, every staged dir stays
+    val sink = new HiveBatchSink(spark, root, allowedLatenessMinutes = 10 * 365 * 24 * 60)
+    val stream = graft.streaming.StreamingDedup.dedup(
+      spark.readStream.schema(threeHours.schema).option("maxFilesPerTrigger", "4").parquet(in),
+      watermark = "1 day")
+    sink.streamWriter(stream, ckpt).trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = fs.globStatus(new org.apache.hadoop.fs.Path(sink.stagingPath, "dt=*/hr=*/ingest_batch=*"))
+      .map(_.getPath)
+    assert(dirs.length == 6, s"expected 3 hours x 2 batches, got ${dirs.map(_.toString).toSeq}")
+    val perDir = dirs.map(d => d.toString -> fs.listStatus(d).count(_.getPath.getName.startsWith("part-")))
+    assert(perDir.forall(_._2 == 1), s"staged files per dir: ${perDir.toSeq}")
+    assert(spark.read.parquet(sink.stagingPath).count() == threeHours.count())
+  }
+
   test("sink: hot hour skew-splits across writer tasks, cold hours stay one file each") {
     // a hot hour arriving through many upstream tasks (AQE's skew split
     // works at map-output granularity — as it does on a real cluster)
@@ -361,6 +386,11 @@ class StreamingSpec extends SparkSpec {
     val out = spark.table("dedup_test")
     assert(out.count() == events.count(), s"${out.count()} vs ${events.count()}")
     assert(out.select("event_id").distinct().count() == events.count())
+    // the same call on batch input (a one-shot load or backfill) keeps
+    // the same ids
+    val batch = graft.streaming.StreamingDedup.dedup(spark.read.parquet(in))
+    val ids = (df: org.apache.spark.sql.DataFrame) => df.select("event_id").as[Long].collect().sorted.toSeq
+    assert(ids(batch) == ids(out), "batch and stream dedup keep different ids")
   }
 
   test("streaming content dedup: re-submitted payloads with fresh ids collapse at ingest") {
@@ -604,5 +634,29 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.Compaction.sealPartition(spark, sink, "20260101", "00")
     val s3 = DoneScanner.newlySealed(spark, sink, s2.cursor)
     assert(s3.newParts == Seq(("20260101", "00")), s"got ${s3.newParts}")
+  }
+
+  test("done-scanner: a marker stamped in the returned cursor's millisecond is delivered, once") {
+    import graft.streaming.DoneScanner
+    val root = tmp()
+    val sink = new HiveBatchSink(spark, root)
+    def batch(rows: Seq[(Long, String)]) =
+      rows.toDF("event_id", "ts_s").select(col("event_id"), to_timestamp(col("ts_s")).as("ts"))
+    val far = java.sql.Timestamp.valueOf("2026-02-01 00:00:00")
+    sink.writeBatch(batch(Seq((1L, "2026-01-01T00:10:00Z"))), 0)
+    sink.sealClosed(far)
+    val s1 = DoneScanner.newlySealed(spark, sink)
+    assert(s1.newParts == Seq(("20260101", "00")))
+    // the next hour seals after the poll, its marker stamped in the very
+    // millisecond the cursor names
+    sink.writeBatch(batch(Seq((2L, "2026-01-01T01:10:00Z"))), 1)
+    sink.sealClosed(far)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.setTimes(new org.apache.hadoop.fs.Path(sink.tablePath, "dt=20260101/hr=01/_DONE"), s1.cursor, -1L)
+    val s2 = DoneScanner.newlySealed(spark, sink, s1.cursor)
+    assert(s2.newParts == Seq(("20260101", "01")), s"got ${s2.newParts}")
+    // idle poll: nothing re-delivered, cursor unchanged
+    val s3 = DoneScanner.newlySealed(spark, sink, s2.cursor)
+    assert(s3.newParts.isEmpty && s3.cursor == s2.cursor, s"got $s3 after $s2")
   }
 }
