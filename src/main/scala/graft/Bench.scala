@@ -53,12 +53,12 @@ object Bench {
   }
 
   /** Fixed-work CPU calibration: seconds to run a deterministic spin
-    * loop, single-threaded and on all cores. Round-8 forensics
-    * (BenchForensic) caught the host stealing cycles in multi-minute
-    * windows with NO guest-side signature: the identical q70 write
-    * stage's summed task time swung 65 s → 670 s across runs on an idle
-    * guest, same plan, same 720-file layout, same codec, disk and tmpfs
-    * alike. Recording calibration at sweep start and end stamps each
+    * loop, single-threaded and on all cores. Round-8 forensics (a
+    * per-stage task-time decomposition) caught the host stealing cycles
+    * in multi-minute windows with NO guest-side signature: the
+    * identical q70 write stage's summed task time swung 65 s → 670 s
+    * across runs on an idle guest, same plan, same 720-file layout, same
+    * codec, disk and tmpfs alike. Recording calibration at sweep start and end stamps each
     * artifact with the environment it was measured in, so a judge
     * comparing rounds can separate "code got slower" from "the VM was
     * throttled during this sweep". */

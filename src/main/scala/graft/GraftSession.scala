@@ -26,8 +26,11 @@ object GraftSession {
       // ObjectHashAggregate (collect_set/collect_list paths) falls back to
       // sort-based aggregation after this many distinct keys per task; the
       // default 128 makes every real basket/neighbor aggregate pay a sort.
-      // 64k keys of small arrays is well within task memory at any scale —
-      // the buffers themselves, not the key count, bound memory use.
+      // The trade-off: these aggregate buffers are not tracked by the
+      // memory manager, so the key count is the only proxy for their
+      // size, and the sort fallback is what spills. Up to 64k buffers per
+      // task stay in memory unchecked — fine for small arrays, an OOM
+      // risk for large ones.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
       .getOrCreate()

@@ -38,7 +38,7 @@ object Baskets {
   // basket-keyed repartition after the aggregate (the fix that won for
   // q349's customer-grain self-join, where it REPLACES the join's own
   // exchange) was built and MEASURED SLOWER across this family
-  // (same-window BenchSeq: q106 2.38→3.56 s, q192 1.93→2.83, q310
+  // (same-window sequential runs: q106 2.38→3.56 s, q192 1.93→2.83, q310
   // 2.63→3.36, q343 2.70→3.41; only the iterate-heavy q98 moved the
   // other way) — here the repartition is a pure EXTRA exchange, and at
   // sf0.1 the emission cpu it parallelizes is smaller than the

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import HiveBatchSink.{dayPath, hours, withHourKeys}
 
 /** Backfill coordinator: reprocess sealed days through the SAME sink
   * path the live stream uses.
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * first-class operation, not a hand-run script against internals. The
   * coordinator replays corrected source events for whole days:
   *
-  *   1. UNSEAL: drop the `_DONE` markers of the target days. Consumers
+  *   1. UNSEAL: drop the done markers of the target days. Consumers
   *      that honor the marker (the reference's done-flag contract) stop
   *      reading those hours for the duration of the rewrite instead of
   *      seeing a torn mix of old and new files.
@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *      run dynamically overwrites exactly its own files.
   *   4. RE-SEAL every staged hour of the target days in one
   *      [[Compaction.sealPartitions]] job — dynamic partition overwrite
-  *      replaces each sealed hour atomically-per-partition and re-drops
-  *      `_DONE`. The watermark is ignored: the day is historical, every
-  *      hour of it is closed by definition.
+  *      replaces each sealed hour atomically-per-partition and
+  *      re-stamps its done marker. The watermark is ignored: the day is
+  *      historical, every hour of it is closed by definition.
   *   5. PRUNE hours the corrected data no longer contains (every event
   *      of that hour was corrupt or upstream retracted it) — dynamic
   *      overwrite only touches partitions present in the new data, so
@@ -50,49 +50,27 @@ object Backfill {
       targetFiles: Int = 1): Seq[(String, String)] = {
     require(dts.nonEmpty, "backfill needs at least one day")
     val spark = corrected.sparkSession
-    val fs = new Path(sink.tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // 1. unseal: readers honoring _DONE stop consuming mid-rewrite
-    val priorHours = sealedHours(sink, dts, fs)
-    priorHours.foreach { case (dt, hr) =>
-      fs.delete(new Path(sink.tablePath, s"dt=$dt/hr=$hr/_DONE"), false)
-    }
+    // 1. unseal: readers honoring the done marker stop consuming mid-rewrite
+    val priorHours = hours(sink.fs, sink.tablePath, dts)
+    sink.unseal(priorHours)
 
     // 2. stale staging for the target days must not merge into the seal
-    dts.foreach(dt => fs.delete(new Path(sink.stagingPath, s"dt=$dt"), true))
+    dts.foreach(dt => sink.fs.delete(dayPath(sink.stagingPath, dt), true))
 
     // 3. re-stage through the live-ingest path (same layout/counters/
     //    idempotency); restrict to the requested days
-    val scoped = corrected.filter(
-      col("ts").isNotNull && date_format(col("ts"), "yyyyMMdd").isin(dts: _*))
+    val scoped = withHourKeys(corrected).filter(col("dt").isin(dts: _*)).drop("dt", "hr")
     sink.writeBatch(scoped, batchId = runId)
 
     // 4. one seal job for every hour the corrected data produced
-    val restaged = stagedHours(sink, dts, fs)
-    Compaction.sealPartitions(spark, sink, restaged.toSeq.sorted, targetFiles)
+    val restaged = hours(sink.fs, sink.stagingPath, dts)
+    Compaction.sealPartitions(spark, sink, restaged, targetFiles)
 
     // 5. hours that existed before but got no corrected rows: remove,
     //    or their old files would silently survive the replay
-    (priorHours -- restaged).foreach { case (dt, hr) =>
-      fs.delete(new Path(sink.tablePath, s"dt=$dt/hr=$hr"), true)
-    }
+    sink.dropHours(sink.tablePath, priorHours.diff(restaged))
     spark.catalog.refreshByPath(sink.tablePath)
-    restaged.toSeq.sorted
+    restaged
   }
-
-  private def sealedHours(sink: HiveBatchSink, dts: Seq[String], fs: org.apache.hadoop.fs.FileSystem): Set[(String, String)] =
-    hourDirs(sink.tablePath, dts, fs)
-
-  private def stagedHours(sink: HiveBatchSink, dts: Seq[String], fs: org.apache.hadoop.fs.FileSystem): Set[(String, String)] =
-    hourDirs(sink.stagingPath, dts, fs)
-
-  private def hourDirs(root: String, dts: Seq[String], fs: org.apache.hadoop.fs.FileSystem): Set[(String, String)] =
-    dts.flatMap { dt =>
-      val dtPath = new Path(root, s"dt=$dt")
-      if (!fs.exists(dtPath)) Seq.empty
-      else
-        fs.listStatus(dtPath).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("hr="))
-          .map(s => (dt, s.getPath.getName.stripPrefix("hr=")))
-    }.toSet
 }

@@ -3,15 +3,17 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import HiveBatchSink.{hourFiles, hours}
 
 /** Partition sealing: the reference's "batch load into Hive" step.
   *
   * A closed staging partition (`staging/dt=…/hr=…`, one subdir per
   * micro-batch) is rewritten as `targetFiles` plain parquet files in the
-  * final table (`table/dt=…/hr=…`), a `_DONE` marker is dropped, and the
-  * staging partition is deleted. Dynamic partition overwrite keeps the
-  * rewrite atomic-per-partition and idempotent; partitions seal
-  * independently, so the step parallelizes trivially across a cluster.
+  * final table (`table/dt=…/hr=…`), the hour's done marker is stamped,
+  * and the staging partition is deleted. Dynamic partition overwrite
+  * keeps the rewrite atomic-per-partition and idempotent; partitions
+  * seal independently, so the step parallelizes trivially across a
+  * cluster.
   */
 object Compaction {
 
@@ -24,29 +26,17 @@ object Compaction {
     sealPartitions(spark, sink, Seq((dt, hr)), targetFiles)
 
   /** Seal many closed partitions in ONE Spark job: read exactly the
-    * staging partition dirs (basePath keeps dt/hr as columns — natural
-    * partition pruning, no full-table listing), shuffle once on (dt, hr)
-    * so each partition lands as ~targetFiles files, dynamic-overwrite
-    * into the final table, then drop markers + staging dirs. O(1) jobs
-    * per micro-batch regardless of how many partitions close — the
+    * staging partition dirs (no full-table listing), shuffle once on
+    * (dt, hr) so each partition lands as ~targetFiles files,
+    * dynamic-overwrite into the final table, then stamp the sink's
+    * markers and drop the staging dirs. O(1) jobs per micro-batch
+    * regardless of how many partitions close — the
     * difference between O(partitions) job launches and a single shuffle
     * at cluster scale. The sealed format follows `sink.sealFormat`:
     * parquet/ORC columnar, or the reference's delimited text lines. */
   def sealPartitions(spark: SparkSession, sink: HiveBatchSink, parts: Seq[(String, String)], targetFiles: Int = 1): Unit = {
     if (parts.isEmpty) return
-    val dirs = parts.map { case (dt, hr) => s"${sink.stagingPath}/dt=$dt/hr=$hr" }
-    val staged = spark.read
-      .option("basePath", sink.stagingPath)
-      // batches staged before a schema change lack the new columns;
-      // union the file schemas so the sealed hour carries the widest one
-      // (missing values read back as null)
-      .option("mergeSchema", "true")
-      .parquet(dirs: _*)
-      // partition dirs infer dt/hr as ints ("hr=09" -> 9); re-derive the
-      // zero-padded string keys from ts, the same way writeBatch did
-      .drop("ingest_batch", "dt", "hr")
-      .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
+    val staged = sink.readHours(sink.stagingPath, parts)
     val toSeal =
       if (sink.sealFormat == "text")
         // the reference's Hive load shape: delimited event lines
@@ -60,24 +50,8 @@ object Compaction {
       .partitionBy("dt", "hr")
       .format(sink.sealFormat)
       .save(sink.tablePath)
-    val fs = new Path(sink.tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // _DONE + staging cleanup are independent per partition: run them on
-    // a bounded pool instead of serially — a wide seal (hundreds of
-    // hours) is otherwise driver-metadata-bound (~2 fs round-trips per
-    // dir; measured ~1.5 s of the q70 line at 720 dirs). Hadoop
-    // FileSystem clients are thread-safe for ops on distinct paths.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, parts.size))
-    try {
-      parts.map { case (dt, hr) =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            fs.create(new Path(sink.tablePath, s"dt=$dt/hr=$hr/_DONE"), true).close()
-            fs.delete(new Path(s"${sink.stagingPath}/dt=$dt/hr=$hr"), true)
-            ()
-          }
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
+    sink.markSealed(parts)
+    sink.dropHours(sink.stagingPath, parts)
     spark.catalog.refreshByPath(sink.stagingPath)
     spark.catalog.refreshByPath(sink.tablePath)
   }
@@ -94,16 +68,10 @@ object Compaction {
       tablePath: String,
       targetFileBytes: Long = 128L << 20,
       slack: Double = 2.0): Seq[(String, String)] = {
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    for {
-      dtDir <- fs.listStatus(root).toSeq if dtDir.isDirectory && dtDir.getPath.getName.startsWith("dt=")
-      hrDir <- fs.listStatus(dtDir.getPath).toSeq if hrDir.isDirectory && hrDir.getPath.getName.startsWith("hr=")
-      files = fs.listStatus(hrDir.getPath).filterNot(_.getPath.getName.startsWith("_"))
-      nFiles = files.length
-      bytes = files.map(_.getLen).sum
-      if nFiles > math.max(1, slack * targetFileCount(bytes, targetFileBytes))
-    } yield (dtDir.getPath.getName.stripPrefix("dt="), hrDir.getPath.getName.stripPrefix("hr="))
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    hours(fs, tablePath).filter { part =>
+      val (nFiles, bytes) = hourFiles(fs, tablePath, part)
+      nFiles > math.max(1, slack * targetFileCount(bytes, targetFileBytes))
+    }
   }
 }

@@ -6,13 +6,14 @@ import org.apache.hadoop.fs.Path
   * of the reference's done-flag contract.
   *
   * A downstream job (e.g. [[IncrementalRollup]]) shouldn't need the
-  * sealing process to hand it seal lists: the `_DONE` markers ARE the
-  * publication. `newlySealed` lists markers stamped at or after a cursor
-  * and returns the next cursor, so a consumer polls with O(partitions)
-  * driver-side listing and never re-processes an hour it has seen —
-  * across restarts, if it persists the cursor (a single long).
+  * sealing process to hand it seal lists: the sink's done markers ARE the
+  * publication. `newlySealed` takes the markers stamped at or after a
+  * cursor from one glob of the sink's markers and returns the next
+  * cursor, so a consumer polls with O(partitions) driver-side listing
+  * and never re-processes an hour it has seen — across restarts, if it
+  * persists the cursor (a single long).
   *
-  * Re-seals count as new: sealing stamps a fresh `_DONE` (marker mtime
+  * Re-seals count as new: sealing stamps a fresh done marker (its mtime
   * advances), so a backfilled or compacted hour is re-delivered to
   * consumers — exactly what a rollup needs to stay consistent.
   */
@@ -29,7 +30,7 @@ object DoneScanner {
     * this host's clock (or one synchronised to within this margin). */
   private val stampSlackMs = 20L
 
-  /** Sealed (dt, hr) whose `_DONE` marker mtime is at or after
+  /** Sealed (dt, hr) whose done marker's mtime is at or after
     * `sinceCursor`, with the next cursor.
     *
     * Marker mtimes have millisecond resolution and trail real time by
@@ -43,24 +44,11 @@ object DoneScanner {
     * next scan instead of skipped, and an idle poll returns the same
     * cursor and no hours. */
   def newlySealed(spark: org.apache.spark.sql.SparkSession, sink: HiveBatchSink, sinceCursor: Long = 0L): Scan = {
-    val root = new Path(sink.tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Scan(Seq.empty, sinceCursor)
+    // a sink that has never sealed has no table: answer without the wait
+    if (!sink.fs.exists(new Path(sink.tablePath))) return Scan(Seq.empty, sinceCursor)
     val horizon = System.currentTimeMillis() + 1
     Thread.sleep(stampSlackMs)
-    val marks =
-      for {
-        dtDir <- fs.listStatus(root).toSeq
-        if dtDir.isDirectory && dtDir.getPath.getName.startsWith("dt=")
-        hrDir <- fs.listStatus(dtDir.getPath).toSeq
-        if hrDir.isDirectory && hrDir.getPath.getName.startsWith("hr=")
-        done = new Path(hrDir.getPath, "_DONE")
-        if fs.exists(done)
-        mtime = fs.getFileStatus(done).getModificationTime
-        if mtime >= sinceCursor
-      } yield (
-        (dtDir.getPath.getName.stripPrefix("dt="), hrDir.getPath.getName.stripPrefix("hr=")),
-        mtime)
+    val marks = sink.markers().filter(_._2 >= sinceCursor)
     if (marks.isEmpty) return Scan(Seq.empty, sinceCursor)
     val next = math.max(sinceCursor, math.min(horizon, marks.map(_._2).max + 1))
     Scan(marks.collect { case (p, m) if m < next => p }.sorted, next)

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.util.LongAccumulator
 import java.sql.Timestamp
+import java.util.concurrent.Executors
 
 object HiveBatchSink {
 
@@ -27,6 +28,61 @@ object HiveBatchSink {
     IngestRule("range_event_value", col("value") >= 0),
     IngestRule("known_event_type",
       col("event_type").isin("click", "view", "purchase", "signup", "error")))
+
+  /** The per-hour done flag: a sealed hour is published to consumers
+    * once `<table>/dt=…/hr=…/_DONE` exists. */
+  private val DoneMarker = "_DONE"
+
+  private[streaming] def dayPath(root: String, dt: String): Path = new Path(root, s"dt=$dt")
+
+  /** `<root>/dt=…/hr=…`: the hour directory of the staging and the
+    * sealed layout alike. */
+  private[streaming] def hourPath(root: String, part: (String, String)): Path =
+    new Path(dayPath(root, part._1), s"hr=${part._2}")
+
+  private def partOf(hourDir: Path): (String, String) =
+    (hourDir.getParent.getName.stripPrefix("dt="), hourDir.getName.stripPrefix("hr="))
+
+  /** A path that is absent, or removed while the glob runs, is no match. */
+  private def glob(fs: FileSystem, pattern: Path): Seq[FileStatus] =
+    Option(fs.globStatus(pattern)).toSeq.flatten
+
+  /** The (dt, hr) hour directories under `root`, of every day or only
+    * of `days`, sorted: one glob, which lists no other day's hours. */
+  private[streaming] def hours(fs: FileSystem, root: String, days: Seq[String] = Seq("*")): Seq[(String, String)] =
+    glob(fs, hourPath(root, (days.mkString("{", ",", "}"), "*")))
+      .filter(_.isDirectory).map(s => partOf(s.getPath)).sorted
+
+  /** Data file count and bytes of one hour directory: everything but the
+    * `_`-prefixed marker and commit files. */
+  private[streaming] def hourFiles(fs: FileSystem, root: String, part: (String, String)): (Int, Long) = {
+    val files = fs.listStatus(hourPath(root, part)).filterNot(_.getPath.getName.startsWith("_"))
+    (files.length, files.map(_.getLen).sum)
+  }
+
+  /** Zero-padded STRING (dt, hr) keys from each row's `ts`: the hour a
+    * row stages and seals under. */
+  private[streaming] def withHourKeys(df: DataFrame): DataFrame =
+    df.withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
+      .withColumn("hr", date_format(col("ts"), "HH"))
+
+  /** Zero-padded STRING (dt, hr) keys from the hour directories a read
+    * inferred them from: partition inference reads `hr=09` back as 9. */
+  private[streaming] def withDirKeys(df: DataFrame): DataFrame =
+    df.withColumn("dt", col("dt").cast("string"))
+      .withColumn("hr", lpad(col("hr").cast("string"), 2, "0"))
+
+  /** Run `op` for every hour on a bounded pool. Per-hour metadata calls
+    * are independent; run serially, a wide seal (hundreds of hours) is
+    * driver-bound on fs round trips (~1.5 s of the q70 line at 720
+    * dirs). Hadoop FileSystem clients are thread-safe for ops on
+    * distinct paths. */
+  private def eachHour(parts: Seq[(String, String)])(op: ((String, String)) => Unit): Unit =
+    if (parts.nonEmpty) {
+      val pool = Executors.newFixedThreadPool(math.min(16, parts.size))
+      try parts.map(p => pool.submit(new Runnable { def run(): Unit = op(p) })).foreach(_.get())
+      finally pool.shutdown()
+    }
 }
 
 /** Spark-first re-expression of the reference's Hive batch sink.
@@ -48,6 +104,12 @@ object HiveBatchSink {
   *     and drops a `_DONE` marker (the reference's Hive load + done
   *     flag) — in parquet, ORC, or the reference's delimited text;
   *   - received/written/corrupt counters as LongAccumulators.
+  *
+  * The sink is the one owner of that layout and of the marker: the
+  * sealing, backfill, maintenance, retention and rollup modules and the
+  * [[DoneScanner]] consumer list, read, mark and unmark hours only
+  * through the helpers here and in the companion, so a change of the
+  * seal record is a change to this file alone.
   *
   * At 100 TB/day: batch statistics ride the single write pass as
   * `observe()` metrics (no second scan of the input), the staging
@@ -76,6 +138,7 @@ final class HiveBatchSink(
     val sealFormat: String = "parquet",
     rules: Seq[HiveBatchSink.IngestRule] = Nil) {
   require(Seq("parquet", "orc", "text").contains(sealFormat), s"unsupported seal format $sealFormat")
+  import HiveBatchSink._
 
   val stagingPath: String    = s"$rootPath/staging"
   val tablePath: String      = s"$rootPath/table"
@@ -85,7 +148,7 @@ final class HiveBatchSink(
   val written: LongAccumulator  = spark.sparkContext.longAccumulator("graft.sink.written")
   val corrupt: LongAccumulator  = spark.sparkContext.longAccumulator("graft.sink.corrupt")
 
-  private def fs = new Path(rootPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[streaming] lazy val fs: FileSystem = new Path(rootPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   final case class BatchStats(
       received: Long,
@@ -148,11 +211,9 @@ final class HiveBatchSink(
       (if (rules.isEmpty) Nil else Seq(count(when(!cleanRow, lit(1))).as("rejected")))
     val adaptive = events.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean
     try {
-      val staged = events
+      val staged = withHourKeys(events
         .observe(obs, metrics.head, metrics.tail: _*)
-        .filter(cleanRow)
-        .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-        .withColumn("hr", date_format(col("ts"), "HH"))
+        .filter(cleanRow))
         .withColumn("ingest_batch", lit(batchId))
       (if (adaptive) staged.hint("rebalance", col("dt"), col("hr"))
        else staged.repartition(col("dt"), col("hr")))
@@ -236,25 +297,55 @@ final class HiveBatchSink(
   }
 
   /** Staged (dt, hr) partitions fully behind the watermark and not yet
-    * sealed into the final table. */
+    * sealed into the final table: one glob of the staged hours and one
+    * marker check per closed staged hour, never a listing of the sealed
+    * table. */
   def closedPartitions(maxEventTime: Timestamp): Seq[(String, String)] = {
     val cutoff = maxEventTime.getTime - allowedLatenessMinutes * 60000L
-    val root   = new Path(stagingPath)
-    if (!fs.exists(root)) return Seq.empty
     val fmt = new java.text.SimpleDateFormat("yyyyMMdd'T'HH")
     fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-    for {
-      dtDir <- fs.listStatus(root).toSeq if dtDir.isDirectory && dtDir.getPath.getName.startsWith("dt=")
-      hrDir <- fs.listStatus(dtDir.getPath).toSeq if hrDir.isDirectory && hrDir.getPath.getName.startsWith("hr=")
-      dt = dtDir.getPath.getName.stripPrefix("dt=")
-      hr = hrDir.getPath.getName.stripPrefix("hr=")
-      if fmt.parse(s"${dt}T$hr").getTime + 3600000L <= cutoff
-      if !isSealed(dt, hr)
-    } yield (dt, hr)
+    hours(fs, stagingPath).filter { case (dt, hr) =>
+      fmt.parse(s"${dt}T$hr").getTime + 3600000L <= cutoff && !isSealed(dt, hr)
+    }
   }
 
-  def isSealed(dt: String, hr: String): Boolean =
-    fs.exists(new Path(tablePath, s"dt=$dt/hr=$hr/_DONE"))
+  private def donePath(part: (String, String)): Path =
+    new Path(hourPath(tablePath, part), DoneMarker)
+
+  def isSealed(dt: String, hr: String): Boolean = fs.exists(donePath((dt, hr)))
+
+  /** Publish sealed hours: stamp a fresh `_DONE` on each (its mtime is
+    * what [[DoneScanner]] follows, so a re-seal is re-delivered). */
+  private[streaming] def markSealed(parts: Seq[(String, String)]): Unit =
+    eachHour(parts)(p => fs.create(donePath(p), true).close())
+
+  /** Withdraw hours from consumers before they are rewritten. */
+  private[streaming] def unseal(parts: Seq[(String, String)]): Unit =
+    eachHour(parts)(p => fs.delete(donePath(p), false))
+
+  /** Remove whole hour directories of `root`, markers included. */
+  private[streaming] def dropHours(root: String, parts: Seq[(String, String)]): Unit =
+    eachHour(parts)(p => fs.delete(hourPath(root, p), true))
+
+  /** Every marked hour of the table with its marker's mtime, from one
+    * glob. A marker removed while the glob runs (a backfill unseal, a
+    * maintenance rewrite) is simply not listed. */
+  private[streaming] def markers(): Seq[((String, String), Long)] =
+    glob(fs, new Path(hourPath(tablePath, ("*", "*")), DoneMarker))
+      .map(s => (partOf(s.getPath.getParent), s.getModificationTime))
+
+  /** Exactly the hours `parts` of `root` (the staging or the sealed
+    * layout), read with no listing beyond them. File schemas are merged,
+    * so hours written before a schema change read back with the widest
+    * one (missing values as null). dt/hr are the zero-padded STRING keys
+    * of each row's directory: partition inference reads `hr=09` as 9. */
+  private[streaming] def readHours(root: String, parts: Seq[(String, String)]): DataFrame =
+    withDirKeys(spark.read
+      .option("basePath", root)
+      .option("mergeSchema", "true")
+      .format(if (root == stagingPath) "parquet" else sealFormat)
+      .load(parts.map(hourPath(root, _).toString): _*)
+      .drop("ingest_batch"))
 
   /** Seal every closed partition (idempotent). Returns sealed (dt, hr). */
   def sealClosed(maxEventTime: Timestamp, targetFiles: Int = 1): Seq[(String, String)] = {

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of a downstream aggregate table — the
-  * consumer side of the reference's `_DONE` contract.
+  * consumer side of the reference's done-flag contract.
   *
   * The whole point of partition-done marking is that downstream batch
   * jobs can recompute ONLY what just closed. This operator maintains an
@@ -31,16 +30,8 @@ final class IncrementalRollup(
     * aggregate sees exactly one sealed hour's rows per (dt, hr) group. */
   def update(newlySealed: Seq[(String, String)]): Long = {
     if (newlySealed.isEmpty) return 0L
-    val dirs = newlySealed.map { case (dt, hr) => s"${sink.tablePath}/dt=$dt/hr=$hr" }
-    val slice = spark.read
-      .option("basePath", sink.tablePath)
-      .format(sink.sealFormat)
-      .load(dirs: _*)
-      .drop("dt", "hr")
-      .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
     val obs = org.apache.spark.sql.Observation()
-    aggregate(slice)
+    aggregate(sink.readHours(sink.tablePath, newlySealed))
       .observe(obs, count(lit(1)).as("rows"))
       .write
       .option("partitionOverwriteMode", "dynamic")
@@ -52,7 +43,7 @@ final class IncrementalRollup(
   }
 
   /** The full consumer loop: discover newly sealed hours from the
-    * `_DONE` markers ([[DoneScanner]]) and fold them in. Persist the
+    * done markers ([[DoneScanner]]) and fold them in. Persist the
     * returned cursor (one long) and the rollup stays exactly-once across
     * restarts, with re-sealed hours (backfill/compaction) re-delivered
     * and overwritten idempotently. */
@@ -62,19 +53,11 @@ final class IncrementalRollup(
     scan
   }
 
-  /** Full recompute over every sealed partition (the equivalence oracle
-    * for the incremental path, and the bootstrap for a new rollup). */
-  def fullRecompute(): Long = {
-    val fs = new Path(sink.tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      for {
-        dtDir <- fs.listStatus(new Path(sink.tablePath)).toSeq
-        if dtDir.isDirectory && dtDir.getPath.getName.startsWith("dt=")
-        hrDir <- fs.listStatus(dtDir.getPath).toSeq
-        if hrDir.isDirectory && hrDir.getPath.getName.startsWith("hr=")
-      } yield (dtDir.getPath.getName.stripPrefix("dt="), hrDir.getPath.getName.stripPrefix("hr="))
-    update(parts)
-  }
+  /** Full recompute over every sealed partition, i.e. every hour with
+    * a done marker (the equivalence oracle for the marker-driven
+    * path, and the bootstrap for a new rollup). An hour being rewritten
+    * by a backfill is unmarked and left out. */
+  def fullRecompute(): Long = update(sink.markers().map(_._1))
 
   def read(): DataFrame = spark.read.parquet(rollupPath)
 }

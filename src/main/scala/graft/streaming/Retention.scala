@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import HiveBatchSink.{dayPath, hourFiles, hours}
 
 /** Partition retention / TTL — the lifecycle rule every time-partitioned
   * Hive warehouse runs: drop sealed `dt` partitions older than the
@@ -12,7 +11,8 @@ import org.apache.spark.sql.functions._
   * compaction planner — no data read, no job) because the partition key
   * IS the age: `dt=yyyyMMdd` compares lexicographically. The audit
   * reports file counts/bytes from the same listing. With `changeLog`,
-  * the expiring rows are captured to the CDC feed (op=`expire`) BEFORE
+  * the expiring rows are captured to the CDC feed (op=`expire`, in the
+  * same columns as [[TableMaintenance]]'s delete and insert rows) BEFORE
   * deletion — one pruned scan of exactly the expiring slices — so
   * downstream mirrors retire the same rows instead of re-diffing.
   * Re-running with the same cutoff is a no-op (the dirs are gone), and
@@ -31,37 +31,18 @@ object Retention {
       sink: HiveBatchSink,
       cutoffDt: String,
       changeLog: Option[(String, Long)] = None): Seq[ExpiredPartition] = {
-    val root = new Path(sink.tablePath)
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(root)) return Seq.empty
-    val expired = for {
-      dtDir <- f.listStatus(root).toSeq
-      if dtDir.isDirectory && dtDir.getPath.getName.startsWith("dt=")
-      dt = dtDir.getPath.getName.stripPrefix("dt=")
-      if dt < cutoffDt
-      hrDir <- f.listStatus(dtDir.getPath).toSeq
-      if hrDir.isDirectory && hrDir.getPath.getName.startsWith("hr=")
-      files = f.listStatus(hrDir.getPath).filterNot(_.getPath.getName.startsWith("_"))
-    } yield ExpiredPartition(dt, hrDir.getPath.getName.stripPrefix("hr="), files.length, files.map(_.getLen).sum)
+    val fs = sink.fs
+    val expired = hours(fs, sink.tablePath).filter(_._1 < cutoffDt)
     if (expired.isEmpty) return Seq.empty
-
-    changeLog.foreach { case (path, changeId) =>
-      val dirs = expired.map(e => s"${sink.tablePath}/dt=${e.dt}/hr=${e.hr}").distinct
-      spark.read
-        .option("basePath", sink.tablePath)
-        .format(sink.sealFormat)
-        .load(dirs: _*)
-        .drop("dt", "hr")
-        .withColumn("change_id", lit(changeId))
-        .withColumn("op", lit("expire"))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy("change_id", "op")
-        .parquet(path)
+    val audit = expired.map { case part @ (dt, hr) =>
+      val (files, bytes) = hourFiles(fs, sink.tablePath, part)
+      ExpiredPartition(dt, hr, files, bytes)
     }
-    expired.map(_.dt).distinct.foreach(dt => f.delete(new Path(sink.tablePath, s"dt=$dt"), true))
+    changeLog.foreach { case (path, changeId) =>
+      TableMaintenance.recordChanges(path, changeId, sink.readHours(sink.tablePath, expired), "expire")
+    }
+    expired.map(_._1).distinct.foreach(dt => fs.delete(dayPath(sink.tablePath, dt), true))
     spark.catalog.refreshByPath(sink.tablePath)
-    expired.sortBy(e => (e.dt, e.hr))
+    audit
   }
 }

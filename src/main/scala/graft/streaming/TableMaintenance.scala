@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import HiveBatchSink.{hours, withDirKeys, withHourKeys}
 
 /** Row-level maintenance of the sealed table — delete and upsert as
   * partition-scoped rewrites.
@@ -30,7 +30,7 @@ object TableMaintenance {
 
   /** Delete rows matching `predicate` (SQL DELETE semantics: a NULL
     * predicate keeps the row). Partitions left empty are removed
-    * entirely; rewritten partitions keep their `_DONE` marker.
+    * entirely; rewritten partitions keep their done marker.
     *
     * With `changeLog`, the removed rows are captured as a CDC feed
     * BEFORE the rewrite (op='delete', partitioned by change batch) —
@@ -60,14 +60,14 @@ object TableMaintenance {
     // CDC capture must happen BEFORE the rewrite destroys the rows
     changeLog.foreach { case (path, changeId) =>
       recordChanges(path, changeId,
-        partitionSlice(spark, sink, affected).filter(coalesce(predicate, lit(false))), "delete")
+        sink.readHours(sink.tablePath, affected).filter(coalesce(predicate, lit(false))), "delete")
     }
     // build the survivor slice only when some partition keeps rows — a
     // zero-path read throws at construction
     val kept =
       if (affected.forall(emptied)) { removeAndRefresh(spark, sink, emptied); 0L }
       else {
-        val survivors = partitionSlice(spark, sink, affected.filterNot(emptied))
+        val survivors = sink.readHours(sink.tablePath, affected.filterNot(emptied))
           .filter(!coalesce(predicate, lit(false)))
         rewrite(spark, sink, survivors, affected, emptied)
       }
@@ -87,19 +87,15 @@ object TableMaintenance {
       keyCols: Seq[String],
       changeLog: Option[(String, Long)] = None): MaintenanceStats = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val keyed = updates
-      .filter(col("ts").isNotNull)
-      .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
+    val keyed = withHourKeys(updates.filter(col("ts").isNotNull))
     val affected = keyed.select("dt", "hr").distinct()
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
     if (affected.isEmpty) return MaintenanceStats(Seq.empty, 0L, 0L)
-    val existingAffected = affected.filter { case (dt, hr) =>
-      fs(spark, sink).exists(new Path(sink.tablePath, s"dt=$dt/hr=$hr"))
-    }
+    val existingAffected = affected.intersect(
+      hours(sink.fs, sink.tablePath, affected.map(_._1).distinct))
     val current =
       if (existingAffected.isEmpty) None
-      else Some(partitionSlice(spark, sink, existingAffected))
+      else Some(sink.readHours(sink.tablePath, existingAffected))
     val replaced = current.fold(0L)(
       _.join(broadcast(keyed.select(keyCols.map(col): _*).distinct()), keyCols, "left_semi").count())
     // CDC: replaced old-versions as deletes, every update row as insert,
@@ -123,7 +119,7 @@ object TableMaintenance {
     * partitioned by (change_id, op) — a re-run of the same changeId
     * dynamically overwrites its own feed slice (idempotent like every
     * other write in the sink). */
-  private def recordChanges(path: String, changeId: Long, rows: DataFrame, op: String): Unit =
+  private[streaming] def recordChanges(path: String, changeId: Long, rows: DataFrame, op: String): Unit =
     rows
       .withColumn("change_id", lit(changeId))
       .withColumn("op", lit(op))
@@ -133,33 +129,17 @@ object TableMaintenance {
       .partitionBy("change_id", "op")
       .parquet(path)
 
-  /** The sealed table with zero-padded STRING dt/hr re-derived from `ts`
-    * (partition-dir inference reads `hr=09` back as int 9). */
+  /** The sealed table with zero-padded STRING dt/hr keys. */
   private def readForRewrite(spark: SparkSession, sink: HiveBatchSink): DataFrame = {
     require(sink.sealFormat != "text", "row-level maintenance needs a columnar seal format")
-    sink.readTable()
-      .drop("dt", "hr")
-      .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
-  }
-
-  /** Read exactly the named partition dirs (no full-table listing). */
-  private def partitionSlice(spark: SparkSession, sink: HiveBatchSink, parts: Seq[(String, String)]): DataFrame = {
-    val dirs = parts.map { case (dt, hr) => s"${sink.tablePath}/dt=$dt/hr=$hr" }
-    spark.read
-      .option("basePath", sink.tablePath)
-      .format(sink.sealFormat)
-      .load(dirs: _*)
-      .drop("dt", "hr")
-      .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
+    withDirKeys(sink.readTable())
   }
 
   /** Dynamic-overwrite `content` into the affected partitions, remove
     * `emptied` dirs (dynamic overwrite only touches partitions present
     * in the new content, so a fully-emptied hour keeps its stale files
     * unless removed explicitly — same rule as Backfill's retracted-hour
-    * prune), restore `_DONE` markers on the rest. Returns the written
+    * prune), restore the done markers on the rest. Returns the written
     * row count (rides the write as observe()). */
   private def rewrite(
       spark: SparkSession,
@@ -178,22 +158,13 @@ object TableMaintenance {
       .format(sink.sealFormat)
       .save(sink.tablePath)
     val written = obs.get("written").asInstanceOf[Long]
-    val f = fs(spark, sink)
-    affected.filterNot(emptied).foreach { case (dt, hr) =>
-      f.create(new Path(sink.tablePath, s"dt=$dt/hr=$hr/_DONE"), true).close()
-    }
+    sink.markSealed(affected.filterNot(emptied))
     removeAndRefresh(spark, sink, emptied)
     written
   }
 
   private def removeAndRefresh(spark: SparkSession, sink: HiveBatchSink, emptied: Set[(String, String)]): Unit = {
-    val f = fs(spark, sink)
-    emptied.foreach { case (dt, hr) =>
-      f.delete(new Path(sink.tablePath, s"dt=$dt/hr=$hr"), true)
-    }
+    sink.dropHours(sink.tablePath, emptied.toSeq)
     spark.catalog.refreshByPath(sink.tablePath)
   }
-
-  private def fs(spark: SparkSession, sink: HiveBatchSink) =
-    new Path(sink.tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }
