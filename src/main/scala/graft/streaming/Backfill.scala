@@ -23,8 +23,8 @@ import HiveBatchSink.{dayPath, hours, withHourKeys}
   *      ingest_batch) idempotency as live ingest; a retried backfill
   *      run dynamically overwrites exactly its own files.
   *   4. RE-SEAL every staged hour of the target days in one
-  *      [[Compaction.sealPartitions]] job — dynamic partition overwrite
-  *      replaces each sealed hour atomically-per-partition and
+  *      [[Compaction.sealPartitions]] call — a rename or a dynamic
+  *      partition overwrite replaces each sealed hour whole and
   *      re-stamps its done marker. The watermark is ignored: the day is
   *      historical, every hour of it is closed by definition.
   *   5. PRUNE hours the corrected data no longer contains (every event
@@ -34,8 +34,8 @@ import HiveBatchSink.{dayPath, hours, withHourKeys}
   *
   * Days NOT in `dts` are never touched — corrected input is filtered to
   * the requested days, so a fat replay dump can't clobber a neighbouring
-  * sealed day. At 100 TB the whole replay is two jobs (stage + seal)
-  * regardless of how many hours the days span.
+  * sealed day. At 100 TB the whole replay is at most two jobs (stage +
+  * seal) regardless of how many hours the days span.
   */
 object Backfill {
 
@@ -46,8 +46,7 @@ object Backfill {
       sink: HiveBatchSink,
       corrected: DataFrame,
       dts: Seq[String],
-      runId: Long,
-      targetFiles: Int = 1): Seq[(String, String)] = {
+      runId: Long): Seq[(String, String)] = {
     require(dts.nonEmpty, "backfill needs at least one day")
     val spark = corrected.sparkSession
 
@@ -63,9 +62,9 @@ object Backfill {
     val scoped = withHourKeys(corrected).filter(col("dt").isin(dts: _*)).drop("dt", "hr")
     sink.writeBatch(scoped, batchId = runId)
 
-    // 4. one seal job for every hour the corrected data produced
+    // 4. one seal for every hour the corrected data produced
     val restaged = hours(sink.fs, sink.stagingPath, dts)
-    Compaction.sealPartitions(spark, sink, restaged, targetFiles)
+    Compaction.sealPartitions(spark, sink, restaged)
 
     // 5. hours that existed before but got no corrected rows: remove,
     //    or their old files would silently survive the replay

@@ -57,7 +57,9 @@ object Erasure {
       predicate: Column): SurfaceReport = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return SurfaceReport(0L, 0, 0)
-    val df = spark.read.parquet(path)
+    // staging's hour keys as written: partition inference reads `hr=09` as 9
+    val raw = spark.read.parquet(path)
+    val df = if (partCols.contains("hr")) HiveBatchSink.withDirKeys(raw) else raw
     val hit = coalesce(predicate, lit(false))
     val sep = "\u0001" // never appears in dt/hr/ingest_batch values
     val pkey = concat_ws(sep, partCols.map(c => col(c).cast("string")): _*)
@@ -82,8 +84,12 @@ object Erasure {
         .parquet(path)
     }
     emptied.foreach { values =>
-      val dir = partCols.zip(values).map { case (c, v) => s"$c=$v" }.mkString("/")
-      fs.delete(new Path(path, dir), true)
+      val dir = new Path(path, partCols.zip(values).map { case (c, v) => s"$c=$v" }.mkString("/"))
+      fs.delete(dir, true)
+      // an hour (and a day) left with no batch goes too: a seal would
+      // otherwise find the empty hour and publish it
+      Iterator.iterate(dir.getParent)(_.getParent).take(partCols.size - 1)
+        .takeWhile(fs.listStatus(_).isEmpty).foreach(fs.delete(_, false))
     }
     SurfaceReport(
       removed = counts.values.map(_._1).sum,

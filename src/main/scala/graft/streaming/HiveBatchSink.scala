@@ -3,10 +3,12 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.util.LongAccumulator
+import java.io.IOException
 import java.sql.Timestamp
-import java.util.concurrent.Executors
+import java.util.concurrent.{Callable, Executors}
 
 object HiveBatchSink {
 
@@ -72,15 +74,16 @@ object HiveBatchSink {
     df.withColumn("dt", col("dt").cast("string"))
       .withColumn("hr", lpad(col("hr").cast("string"), 2, "0"))
 
-  /** Run `op` for every hour on a bounded pool. Per-hour metadata calls
-    * are independent; run serially, a wide seal (hundreds of hours) is
-    * driver-bound on fs round trips (~1.5 s of the q70 line at 720
-    * dirs). Hadoop FileSystem clients are thread-safe for ops on
-    * distinct paths. */
-  private def eachHour(parts: Seq[(String, String)])(op: ((String, String)) => Unit): Unit =
-    if (parts.nonEmpty) {
+  /** Run `op` for every hour on a bounded pool, results in `parts`
+    * order. Per-hour metadata calls are independent; run serially, a
+    * wide seal (hundreds of hours) is driver-bound on fs round trips
+    * (~1.5 s of the q70 line at 720 dirs). Hadoop FileSystem clients are
+    * thread-safe for ops on distinct paths. */
+  private[streaming] def eachHour[A](parts: Seq[(String, String)])(op: ((String, String)) => A): Seq[A] =
+    if (parts.isEmpty) Nil
+    else {
       val pool = Executors.newFixedThreadPool(math.min(16, parts.size))
-      try parts.map(p => pool.submit(new Runnable { def run(): Unit = op(p) })).foreach(_.get())
+      try parts.map(p => pool.submit(new Callable[A] { def call(): A = op(p) })).map(_.get())
       finally pool.shutdown()
     }
 }
@@ -99,10 +102,14 @@ object HiveBatchSink {
   *     reference's commit/rollback, without any rollback bookkeeping);
   *   - watermark-driven partition close: (dt, hr) fully behind
   *     `maxEventTime - allowedLateness` are eligible for sealing;
-  *   - [[Compaction.sealPartitions]] batch-loads closed staging
-  *     partitions into `<root>/table/dt=…/hr=…` at a target file count
-  *     and drops a `_DONE` marker (the reference's Hive load + done
-  *     flag) — in parquet, ORC, or the reference's delimited text;
+  *   - [[Compaction.sealPartitions]] commits closed staging partitions
+  *     into `<root>/table/dt=…/hr=…`, one file per hour, and drops a
+  *     `_DONE` marker (the reference's Hive load + done flag) — in
+  *     parquet, ORC, or the reference's delimited text. An hour that
+  *     staged one parquet file is renamed into the table; the others
+  *     are rewritten by one Spark job. An hour whose staged file is
+  *     already in the table (a seal stopped between the rename and the
+  *     marker) rolls forward: it is marked and dropped, not read;
   *   - received/written/corrupt counters as LongAccumulators.
   *
   * The sink is the one owner of that layout and of the marker: the
@@ -120,8 +127,9 @@ object HiveBatchSink {
   * runs with AQE off, where Spark drops the rebalance hint, so there it
   * is a plain hash repartition. Staged files roll at
   * `maxRecordsPerFile` (the reference's size-based rolling), sealing is
-  * one job for all closed partitions, markers are O(partitions), and
-  * the only driver state is the streaming checkpoint.
+  * a rename per one-file hour and at most one job for all the other
+  * closed partitions, markers are O(partitions), and the only driver
+  * state is the streaming checkpoint.
   *
   * @param maxRecordsPerFile staging file roll threshold (0 = no limit)
   * @param sealFormat        sealed-table format: parquet | orc | text
@@ -335,22 +343,47 @@ final class HiveBatchSink(
       .map(s => (partOf(s.getPath.getParent), s.getModificationTime))
 
   /** Exactly the hours `parts` of `root` (the staging or the sealed
-    * layout), read with no listing beyond them. File schemas are merged,
+    * layout), read with no listing beyond them. Unless the caller knows
+    * the files' `schema`, file schemas are merged (one inference job),
     * so hours written before a schema change read back with the widest
     * one (missing values as null). dt/hr are the zero-padded STRING keys
     * of each row's directory: partition inference reads `hr=09` as 9. */
-  private[streaming] def readHours(root: String, parts: Seq[(String, String)]): DataFrame =
-    withDirKeys(spark.read
-      .option("basePath", root)
-      .option("mergeSchema", "true")
-      .format(if (root == stagingPath) "parquet" else sealFormat)
+  private[streaming] def readHours(
+      root: String,
+      parts: Seq[(String, String)],
+      schema: Option[StructType] = None): DataFrame = {
+    val reader = spark.read.option("basePath", root).format(if (root == stagingPath) "parquet" else sealFormat)
+    withDirKeys(schema.fold(reader.option("mergeSchema", "true"))(reader.schema)
       .load(parts.map(hourPath(root, _).toString): _*)
       .drop("ingest_batch"))
+  }
+
+  /** The staged data files of each hour in `parts` (Nil for an hour that
+    * holds none), from one glob over those hours' days. */
+  private[streaming] def stagedFiles(parts: Seq[(String, String)]): Map[(String, String), Seq[FileStatus]] = {
+    val days = parts.map(_._1).distinct.mkString("{", ",", "}")
+    val byHour = glob(fs, new Path(hourPath(stagingPath, (days, "*")), "ingest_batch=*/*"))
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .groupBy(s => partOf(s.getPath.getParent.getParent))
+    parts.map(p => p -> byHour.getOrElse(p, Nil).toSeq).toMap
+  }
+
+  /** Seal hours by rename: each table hour is cleared, as a dynamic
+    * overwrite clears it, and its one staged data file moves in. A
+    * metadata operation on local FS and HDFS; a copy on an object store. */
+  private[streaming] def moveIntoTable(files: Map[(String, String), Path]): Unit =
+    eachHour(files.keys.toSeq) { p =>
+      val dir = hourPath(tablePath, p)
+      fs.delete(dir, true)
+      fs.mkdirs(dir)
+      if (!fs.rename(files(p), new Path(dir, files(p).getName)))
+        throw new IOException(s"could not move ${files(p)} into $dir")
+    }
 
   /** Seal every closed partition (idempotent). Returns sealed (dt, hr). */
-  def sealClosed(maxEventTime: Timestamp, targetFiles: Int = 1): Seq[(String, String)] = {
+  def sealClosed(maxEventTime: Timestamp): Seq[(String, String)] = {
     val closed = closedPartitions(maxEventTime)
-    Compaction.sealPartitions(spark, this, closed, targetFiles)
+    Compaction.sealPartitions(spark, this, closed)
     closed
   }
 

@@ -77,4 +77,21 @@ class ErasureSpec extends SparkSpec {
     val dirs = fs.globStatus(new org.apache.hadoop.fs.Path(sink.stagingPath, "dt=*/hr=*/ingest_batch=*"))
     assert(dirs == null || dirs.isEmpty, "emptied partition dir must be removed")
   }
+
+  test("erasing from staged hours before 10:00 rewrites them under their zero-padded directories") {
+    val sink = freshSink()
+    def at(id: Long, iso: String, uid: Long) =
+      (id, Timestamp.from(java.time.Instant.parse(iso)), uid, "view", 1.0, "{}")
+    sink.writeBatch(Seq(
+      at(1, "2026-01-01T09:10:00Z", 7L), at(2, "2026-01-01T09:20:00Z", 8L), at(3, "2026-01-01T08:20:00Z", 7L)
+    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props"), 1L)
+    val r = Erasure.forgetWhere(spark, sink, col("user_id") === 7L)
+    assert(r.staging == Erasure.SurfaceReport(removed = 2L, partitionsRewritten = 1, partitionsDropped = 1), s"$r")
+    val ids = spark.read.parquet(sink.stagingPath).select("event_id").as[Long].collect().toSeq
+    assert(ids == Seq(2L), s"staging holds $ids")
+    val fs = new org.apache.hadoop.fs.Path(sink.stagingPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hours = fs.globStatus(new org.apache.hadoop.fs.Path(sink.stagingPath, "dt=*/hr=*")).map(_.getPath.getName).toSeq
+    assert(hours == Seq("hr=09"), s"staged hour dirs: $hours")
+  }
 }
