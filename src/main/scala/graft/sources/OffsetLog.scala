@@ -29,13 +29,18 @@ import org.apache.spark.sql.functions._
   *   - consumer-group offsets commit atomically (temp + rename), and a
   *     committed range re-read returns the identical rows (replay).
   *
-  * Exactly-once end-to-end with the sink: `drain` hands the caller the
-  * un-consumed range + its end offsets; the caller lands the batch via
-  * [[graft.streaming.HiveBatchSink]] (idempotent per `ingest_batch`
-  * dynamic overwrite) and only then commits. A crash between land and
-  * commit replays the same range into the same ingest_batch — which
-  * overwrites itself. At-least-once delivery + idempotent sink =
-  * exactly-once table state, the reference's transaction model. */
+  * Exactly-once end-to-end with the sink is the engine's handshake:
+  * [[OffsetLogSourceProvider]] streams the log, the engine writes each
+  * batch's range to its offset WAL before the batch runs, and
+  * [[graft.streaming.HiveBatchSink.streamWriter]] lands the batch under
+  * its batch id (idempotent per `ingest_batch` dynamic overwrite) before
+  * the engine commits it. A crash between land and commit re-runs the
+  * same range under the same id, which overwrites itself. At-least-once
+  * delivery + idempotent sink = exactly-once table state, the
+  * reference's transaction model. `drain` is the batch read of a
+  * group's un-consumed range; `committed`/`commit` hold the group
+  * cursor that the source's `commitGroup` mirror and
+  * [[graft.streaming.SinkMonitor]]'s lag probe read. */
 object OffsetLog {
 
   private val SegRe = "segment-(\\d+)-(\\d+)\\.parquet".r
@@ -246,11 +251,12 @@ object OffsetLog {
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** The consume step: everything the group hasn't committed, plus the
-    * end offsets to commit AFTER the batch lands (see object doc for
-    * the exactly-once handshake with the sink). Safe to call before the
-    * first producer append — returns an empty caught-up batch (with
-    * `schema` if supplied), never throws on a segment-less log. */
+  /** The batch read of a group: everything the group hasn't committed,
+    * plus the end offsets to commit once the rows are consumed (a
+    * stream uses the engine's handshake instead, see the object doc).
+    * Safe to call before the first producer append — returns an empty
+    * caught-up batch (with `schema` if supplied), never throws on a
+    * segment-less log. */
   def drain(
       spark: SparkSession,
       root: String,

@@ -18,11 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** [[OffsetLog]] as a genuine Data Source V2 `MicroBatchStream` — the
-  * standard `readStream.format(...)` surface over the same immutable
-  * segment layout the hand-rolled relay drains, so Structured Streaming
-  * OWNS offset tracking and checkpointing (the engine's WAL replaces the
-  * relay's consumer-group files; the relay stays as the exactly-once
-  * comparison harness and for callers without a streaming runtime).
+  * standard `readStream.format(...)` surface over the immutable segment
+  * layout, so Structured Streaming OWNS offset tracking and
+  * checkpointing: the engine's offset WAL, not a consumer-group file, is
+  * the cursor. [[graft.streaming.HiveBatchSink.streamWriter]] over this
+  * source (or over a `unionByName` of several, committed together) is
+  * the bus → sealed-hour path.
   *
   * {{{
   *   spark.readStream
@@ -322,8 +323,8 @@ private[sources] class OffsetLogMicroBatchStream(
     * With `commitGroup` set, the committed range is ALSO mirrored into
     * the log's consumer-group cursor file — purely observational (a
     * restart still resumes from the WAL, never this file), but it puts
-    * an engine-owned stream on the same [[OffsetLog.lagReport]] ops
-    * surface as the relay: lag / behind_retention become visible to a
+    * an engine-owned stream on the [[OffsetLog.lagReport]] ops
+    * surface: lag / behind_retention become visible to a
     * monitor without touching the checkpoint. The engine invokes this
     * while cleaning up batch N before constructing N+1, so the mirror
     * TRAILS the true committed position by at most one batch (and a

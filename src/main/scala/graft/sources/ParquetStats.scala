@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ratios, without scanning a single data page. At 100 TB this is how
   * you find the column that should be zstd-compressed, dictionary-
   * encoded, or dropped from the hot table — the same metadata-only
-  * discipline as the zone-map index and the compaction planner (driver
+  * discipline as the zone-map index and the seal's schema check (driver
   * listing + footer reads, O(files), no Spark job). Run it over one
   * sealed partition to audit the whole table's layout. */
 object ParquetStats {

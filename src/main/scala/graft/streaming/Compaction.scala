@@ -1,14 +1,14 @@
 package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import HiveBatchSink.{eachHour, hourFiles, hours}
+import HiveBatchSink.eachHour
 
 /** Partition sealing: the reference's "batch load into Hive" step.
   *
@@ -24,11 +24,6 @@ import HiveBatchSink.{eachHour, hourFiles, hours}
   * step parallelizes trivially across a cluster.
   */
 object Compaction {
-
-  /** File count for a partition: size-based (like the reference's rolled
-    * file sizing), at least 1. */
-  def targetFileCount(partitionBytes: Long, targetFileBytes: Long = 128L << 20): Int =
-    math.max(1, math.ceil(partitionBytes.toDouble / targetFileBytes).toInt)
 
   def sealPartition(spark: SparkSession, sink: HiveBatchSink, dt: String, hr: String): Unit =
     sealPartitions(spark, sink, Seq((dt, hr)))
@@ -94,24 +89,5 @@ object Compaction {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     try ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, reader.getFooter), converter)
     finally reader.close()
-  }
-
-  /** Which sealed partitions are worth rewriting — planned from file
-    * STATS (a driver-side listing, no data read): a partition whose
-    * data-file count exceeds what size-based rolling would produce by
-    * `slack`× is fragmented (many small files → many scan tasks + footer
-    * overhead downstream) and gets picked. Late data trickling into a
-    * re-opened hour is the usual cause. Run periodically; feed the
-    * result straight back into [[sealPartitions]]. */
-  def planCompaction(
-      spark: SparkSession,
-      tablePath: String,
-      targetFileBytes: Long = 128L << 20,
-      slack: Double = 2.0): Seq[(String, String)] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hours(fs, tablePath).filter { part =>
-      val (nFiles, bytes) = hourFiles(fs, tablePath, part)
-      nFiles > math.max(1, slack * targetFileCount(bytes, targetFileBytes))
-    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.util.LongAccumulator
 import java.io.IOException
 import java.sql.Timestamp
@@ -123,9 +123,9 @@ object HiveBatchSink {
   * shuffle hashes rows on (dt, hr), so each hour of a batch stages one
   * file (no small-file explosion). In a batch write with AQE on it is a
   * REBALANCE, which also skew-splits a hot hour across tasks by size
-  * (`optimizeSkewsInRebalancePartitions`). A stream's `foreachBatch`
-  * runs with AQE off, where Spark drops the rebalance hint, so there it
-  * is a plain hash repartition. Staged files roll at
+  * (`optimizeSkewsInRebalancePartitions`). A stateful stream's
+  * `foreachBatch` runs with AQE off, where Spark drops the rebalance
+  * hint, so there it is a plain hash repartition. Staged files roll at
   * `maxRecordsPerFile` (the reference's size-based rolling), sealing is
   * a rename per one-file hour and at most one job for all the other
   * closed partitions, markers are O(partitions), and the only driver
@@ -193,22 +193,25 @@ final class HiveBatchSink(
     // write) this is a REBALANCE: OptimizeSkewInRebalancePartitions
     // splits a hot hour across tasks once it exceeds the advisory size —
     // write parallelism proportional to each hour's actual bytes. A
-    // stream's foreachBatch session runs with AQE off, where Spark drops
-    // the rebalance hint and each hour would stage one file per input
-    // task, so there the shuffle is a plain hash repartition. AQE
-    // partition COALESCING is scoped off for this write only: a writer
-    // task pays a serial parquet open/close per partition directory it
-    // covers, so merging cold hours into few tasks makes wide layouts
-    // (hundreds of open hours) commit-bound — and coalescing can't
-    // reduce the file count anyway, since the hash layout already
-    // guarantees one file per dir. Skew-splitting is unaffected.
-    // note: SQLConf is session-scoped, so a concurrent query planned in
-    // THIS session during the write also sees the flag — acceptable for
-    // a dedicated ingest session (the deployment shape for a sink);
-    // restore distinguishes explicitly-set from default
+    // stateful stream's foreachBatch session runs with AQE off, where
+    // Spark drops the rebalance hint and each hour would stage one file
+    // per input task, so there the shuffle is a plain hash repartition.
+    // With AQE on, partition COALESCING is scoped off for this write
+    // only: a writer task pays a serial parquet open/close per partition
+    // directory it covers, so merging cold hours into few tasks makes
+    // wide layouts (hundreds of open hours) commit-bound — and
+    // coalescing can't reduce the file count anyway, since the hash
+    // layout already guarantees one file per dir. Skew-splitting is
+    // unaffected. The flag is set on the session that runs the write:
+    // inside foreachBatch that is the stream's own session, not the
+    // sink's, so only a batch write (the caller's session) lets a
+    // concurrent query in that session see it. Restore distinguishes
+    // explicitly-set from default.
+    val conf         = events.sparkSession.conf
+    val adaptive     = conf.get("spark.sql.adaptive.enabled").toBoolean
     val coalesceKey  = "spark.sql.adaptive.coalescePartitions.enabled"
-    val coalescePrev = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
+    val coalescePrev = conf.getOption(coalesceKey)
+    if (adaptive) conf.set(coalesceKey, "false")
     // per-rule violation counts and the distinct rejected-row count
     // ride the same single observe pass as the base stats
     val metrics = Seq(
@@ -217,7 +220,6 @@ final class HiveBatchSink(
       max(col("ts")).as("max_ts")) ++
       rules.map(r => count(when(violates(r), lit(1))).as(s"viol_${r.id}")) ++
       (if (rules.isEmpty) Nil else Seq(count(when(!cleanRow, lit(1))).as("rejected")))
-    val adaptive = events.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean
     try {
       val staged = withHourKeys(events
         .observe(obs, metrics.head, metrics.tail: _*)
@@ -231,7 +233,7 @@ final class HiveBatchSink(
         .mode("overwrite")
         .partitionBy("dt", "hr", "ingest_batch")
         .parquet(stagingPath)
-    } finally coalescePrev.fold(spark.conf.unset(coalesceKey))(v => spark.conf.set(coalesceKey, v))
+    } finally if (adaptive) coalescePrev.fold(conf.unset(coalesceKey))(conf.set(coalesceKey, _))
     // a dynamic-overwrite write that stages ZERO rows (every row
     // rejected) skips the observed execution entirely and the
     // Observation resolves to an empty map — recompute the stats with
@@ -441,10 +443,11 @@ final class HiveBatchSink(
     }
   }
 
-  /** Wire the full lifecycle (stage → close → seal) into a stream. */
-  def start(stream: DataFrame, checkpoint: String): StreamingQuery =
-    streamWriter(stream, checkpoint).start()
-
+  /** Wire the full lifecycle (stage → close → seal) into a stream: the
+    * library's one composition from a source to sealed hours. The engine
+    * owns the offsets: a batch is re-run under its own id after a crash
+    * between the staging write and the commit, so its dynamic-overwrite
+    * staging replaces the crashed attempt's files. */
   def streamWriter(
       stream: DataFrame,
       checkpoint: String,

@@ -7,8 +7,8 @@ import HiveBatchSink.{dayPath, hourFiles, hours}
   * Hive warehouse runs: drop sealed `dt` partitions older than the
   * retention horizon, atomically per day-directory.
   *
-  * Discovery is a DRIVER LISTING only (O(partitions), like the
-  * compaction planner — no data read, no job) because the partition key
+  * Discovery is a DRIVER LISTING only (O(partitions), no data read, no
+  * job) because the partition key
   * IS the age: `dt=yyyyMMdd` compares lexicographically. The audit
   * reports file counts/bytes from the same listing. With `changeLog`,
   * the expiring rows are captured to the CDC feed (op=`expire`, in the

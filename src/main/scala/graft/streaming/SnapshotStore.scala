@@ -268,9 +268,7 @@ object SnapshotStore {
     withLock(f, partDir)(writeSnapshotLocked(spark, f, partDir, df, targetFiles))
   }
 
-  /** Rewrite the live snapshot as `targetFiles` files (the size-based
-    * rolling of [[Compaction.targetFileCount]] applies the same way) and
-    * swap. Concurrent readers of the old snapshot are untouched. The
+  /** Rewrite the live snapshot as `targetFiles` files and swap. Concurrent readers of the old snapshot are untouched. The
     * LIVE pointer is resolved INSIDE the writer lock — so the
     * read-compact-swap is atomic w.r.t. other writers and can never
     * publish a rewrite of pre-ingest data over a just-landed ingest. */

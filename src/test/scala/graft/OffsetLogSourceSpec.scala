@@ -1,16 +1,18 @@
 package graft
 
 import graft.sources.{OffsetLog, OffsetLogSourceProvider, Tables}
-import graft.streaming.{HiveBatchSink, OffsetLogRelay}
+import graft.streaming.HiveBatchSink
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import java.nio.file.Files
 
 /** source_offset_log as a DSv2 MicroBatchStream: `readStream` drains the
-  * same immutable segments the hand-rolled relay does, with the ENGINE
-  * owning offsets/checkpointing — proven by landing the identical sealed
-  * table through both paths, and by a checkpointed restart resuming past
+  * immutable segments with the ENGINE owning offsets/checkpointing —
+  * proven by `HiveBatchSink.streamWriter` landing every logged row
+  * exactly once through a crash between land and commit, for one log and
+  * for a union of two, and by a checkpointed restart resuming past
   * already-processed segments. */
 class OffsetLogSourceSpec extends SparkSpec {
   private val P = 4
@@ -23,39 +25,82 @@ class OffsetLogSourceSpec extends SparkSpec {
       .option("numPartitions", P.toString)
       .load()
 
-  test("readStream over the log lands the same sealed table as the relay") {
-    val logRoot = Files.createTempDirectory("graft-dsv2-log").toString
+  private def ids(df: DataFrame): Seq[Long] = df.select("event_id").collect().map(_.getLong(0)).toSeq
+
+  private def logIds(logs: Seq[String]): Seq[Long] =
+    logs.flatMap(l => ids(OffsetLog.readBatch(spark, l, P, Map.empty, OffsetLog.endOffsets(spark, l, P)))).sorted
+
+  /** Sealed ∪ staged `event_id`s, sorted: every row the sink holds. */
+  private def landedIds(sink: HiveBatchSink): Seq[Long] =
+    (ids(sink.readTable()) ++ ids(spark.read.parquet(sink.stagingPath))).sorted
+
+  /** The exactly-once contract over `logs`: sealed ∪ staged `event_id`s
+    * are the logs' own ids, each once; every sealed hour carries `_DONE`
+    * and none still has staged rows. */
+  private def assertLandedOnce(sink: HiveBatchSink, logs: Seq[String]): Unit = {
+    assert(landedIds(sink) == logIds(logs), "sealed ∪ staged must hold every logged row exactly once")
+    val fs = new Path(sink.tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hourDirs(root: String): Set[String] =
+      Option(fs.globStatus(new Path(root, "dt=*/hr=*"))).toSeq.flatten
+        .map(s => s"${s.getPath.getParent.getName}/${s.getPath.getName}").toSet
+    val sealedHours = hourDirs(sink.tablePath)
+    assert(sealedHours.nonEmpty, "the fixture must seal hours")
+    val unmarked = sealedHours.filterNot(h => fs.exists(new Path(s"${sink.tablePath}/$h/_DONE")))
+    assert(unmarked.isEmpty, s"sealed hours without _DONE: $unmarked")
+    val stranded = sealedHours.intersect(hourDirs(sink.stagingPath))
+    assert(stranded.isEmpty, s"sealed hours with staged rows left: $stranded")
+  }
+
+  /** `streamWriter` over the union of `logs`, through a land-without-
+    * commit crash with head movement. The events go in three tranches,
+    * in time order (a later tranche holds no row of an hour an earlier
+    * one sealed), each split across the logs:
+    *   1. tranche 1 lands and commits;
+    *   2. tranche 2's batch lands through `writeBatch` and throws before
+    *      the engine commits it;
+    *   3. tranche 3 is appended to every log while the query is down;
+    *   4. the restart on the same checkpoint re-runs the crashed batch
+    *      under its own id, so its staging replaces the crashed files. */
+  private def assertCrashReplayLandsOnce(logs: Seq[String]): Unit = {
     val events = Tables(spark, sfDir).events
-    OffsetLog.append(spark, logRoot, events.limit(400), "user_id", P)
-    OffsetLog.append(spark, logRoot, events.exceptAll(events.limit(400)), "user_id", P)
+    val byTime = ids(events.orderBy("ts", "event_id"))
+    val slices = 3 * logs.size
+    def append(tranche: Int): Unit = logs.indices.foreach { i =>
+      val j = tranche * logs.size + i
+      val slice = byTime.slice(j * byTime.size / slices, (j + 1) * byTime.size / slices)
+      OffsetLog.append(spark, logs(i), events.filter(col("event_id").isin(slice: _*)), "user_id", P)
+    }
+    val sink = new HiveBatchSink(spark, Files.createTempDirectory("graft-dsv2-crash-sink").toString)
+    val ck = Files.createTempDirectory("graft-dsv2-crash-ck").toString
+    append(0)
+    // the source takes its schema from the segments, so attach after the first append
+    val stream = logs.map(readLog(_).drop("partition", "offset")).reduce(_.unionByName(_))
+    val crashedBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
+    def run(crash: Boolean): Unit =
+      sink.streamWriter(stream, ck, onBatch = (b, id) =>
+        if (crash) {
+          sink.writeBatch(b, id)
+          crashedBatch.set(id)
+          throw new IllegalStateException(s"crash after landing batch $id")
+        })
+        .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
 
-    // path A: the hand-rolled exactly-once relay
-    val sinkA = new HiveBatchSink(spark,
-      Files.createTempDirectory("graft-dsv2-sinkA").toString)
-    OffsetLogRelay.drainLoop(spark, logRoot, "agent", P, sinkA)
+    run(crash = false)
+    append(1)
+    val err = intercept[StreamingQueryException](run(crash = true))
+    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("crash after landing"))))
+    // landed, NOT committed: the engine logged the batch's offsets but no commit
+    val id = crashedBatch.get()
+    assert(id >= 0 && new java.io.File(s"$ck/offsets/$id").exists && !new java.io.File(s"$ck/commits/$id").exists)
+    assert(landedIds(sink) == logIds(logs), "the crashed batch's rows are staged once")
+    append(2) // the heads move while the query is down
+    run(crash = false)
+    assertLandedOnce(sink, logs)
+  }
 
-    // path B: standard Structured Streaming over the DSv2 source
-    val sinkB = new HiveBatchSink(spark,
-      Files.createTempDirectory("graft-dsv2-sinkB").toString)
-    val ck = Files.createTempDirectory("graft-dsv2-ck").toString
-    val q = sinkB
-      .streamWriter(readLog(logRoot).drop("partition", "offset"), ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-
-    def surface(s: HiveBatchSink) =
-      s.readTable().select("event_id").unionByName(
-        spark.read.parquet(s.stagingPath).select("event_id"))
-    val a = surface(sinkA)
-    val b = surface(sinkB)
-    assert(a.count() == events.count() && b.count() == a.count())
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-      "both paths land exactly the log's rows")
-    // sealed partition layout agrees too (same watermark rule)
-    val sealedA = sinkA.readTable().select("dt", "hr").distinct().collect().toSet
-    val sealedB = sinkB.readTable().select("dt", "hr").distinct().collect().toSet
-    assert(sealedA == sealedB, s"sealed partitions diverge: $sealedA vs $sealedB")
+  test("one log via streamWriter: exactly once through a crash") {
+    assertCrashReplayLandsOnce(Seq(Files.createTempDirectory("graft-dsv2-log").toString))
   }
 
   test("schema is directory partition + payload + offset; batch rows carry real offsets") {
@@ -118,39 +163,12 @@ class OffsetLogSourceSpec extends SparkSpec {
     assert(seen.size == new java.util.HashSet[Long](seen).size, "no duplicates")
   }
 
-  test("fan-in through the standard API: a union of two DSv2 log streams lands the FanInRelay's table") {
-    val logA = Files.createTempDirectory("graft-dsv2-fanA").toString
-    val logB = Files.createTempDirectory("graft-dsv2-fanB").toString
-    val events = Tables(spark, sfDir).events
-    OffsetLog.append(spark, logA, events.limit(120), "user_id", P)
-    OffsetLog.append(spark, logB, events.exceptAll(events.limit(120)).limit(80), "user_id", P)
-
-    // path A: the combined-commit fan-in relay
-    val sinkA = new HiveBatchSink(spark,
-      Files.createTempDirectory("graft-dsv2-fansinkA").toString)
-    graft.streaming.FanInRelay.drainLoop(spark, Seq(logA, logB), "agents", P, sinkA,
-      commitRoot = Files.createTempDirectory("graft-dsv2-fanck").toString)
-
-    // path B: engine-checkpointed union — Structured Streaming tracks
-    // each source's offsets in ONE commit, which is exactly the
-    // combined-commit atomicity FanInRelay hand-builds
-    val sinkB = new HiveBatchSink(spark,
-      Files.createTempDirectory("graft-dsv2-fansinkB").toString)
-    val unioned = readLog(logA).drop("partition", "offset")
-      .unionByName(readLog(logB).drop("partition", "offset"))
-    val q = sinkB
-      .streamWriter(unioned, Files.createTempDirectory("graft-dsv2-fanck2").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-
-    def surface(s: HiveBatchSink) =
-      s.readTable().select("event_id").unionByName(
-        spark.read.parquet(s.stagingPath).select("event_id"))
-    val a = surface(sinkA); val b = surface(sinkB)
-    assert(a.count() == 200 && b.count() == 200)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-      "fan-in through readStream lands exactly the relay's rows")
+  test("fan-in via streamWriter: two logs, exactly once through a crash") {
+    // the engine logs and commits every source's offsets of a batch
+    // together, so a crash can't advance one log without the other
+    assertCrashReplayLandsOnce(Seq(
+      Files.createTempDirectory("graft-dsv2-fanA").toString,
+      Files.createTempDirectory("graft-dsv2-fanB").toString))
   }
 
   test("numPartitions discovers from the directory layout when not specified") {
@@ -177,23 +195,18 @@ class OffsetLogSourceSpec extends SparkSpec {
     OffsetLog.append(spark, logRoot, events.limit(300), "user_id", P)
     OffsetLog.append(spark, logRoot, events.exceptAll(events.limit(300)), "user_id", P)
 
-    // path A: the hand-rolled exactly-once relay (unbounded, the oracle)
-    val sinkA = new HiveBatchSink(spark,
-      Files.createTempDirectory("graft-dsv2-ac1-sinkA").toString)
-    OffsetLogRelay.drainLoop(spark, logRoot, "agent", P, sinkA)
-
-    // path B: engine-owned drain, capped at cap rows per trigger
+    // engine-owned drain, capped at cap rows per trigger
     val cap = math.max(1L, n / 5)
     val batchSizes = java.util.Collections.synchronizedList(new java.util.ArrayList[Long]())
-    val sinkB = new HiveBatchSink(spark,
-      Files.createTempDirectory("graft-dsv2-ac1-sinkB").toString)
+    val sink = new HiveBatchSink(spark,
+      Files.createTempDirectory("graft-dsv2-ac1-sink").toString)
     val capped = spark.readStream.format(fmt)
       .option("path", logRoot)
       .option("numPartitions", P.toString)
       .option("maxRowsPerTrigger", cap.toString)
       .load()
     val ck = Files.createTempDirectory("graft-dsv2-ac1-ck").toString
-    val q = sinkB
+    val q = sink
       .streamWriter(capped.drop("partition", "offset"), ck,
         onBatch = (b, _) => batchSizes.add(b.count()))
       .trigger(Trigger.AvailableNow())
@@ -206,13 +219,7 @@ class OffsetLogSourceSpec extends SparkSpec {
       s"a ${n}-row backlog at cap=$cap must drain in >=3 bounded batches, got $sizes")
     assert(sizes.forall(_ <= cap), s"a batch exceeded maxRowsPerTrigger=$cap: $sizes")
     assert(sizes.sum == n, s"capped drain lost/duplicated rows: ${sizes.sum} != $n")
-
-    def surface(s: HiveBatchSink) =
-      s.readTable().select("event_id").unionByName(
-        spark.read.parquet(s.stagingPath).select("event_id"))
-    val a = surface(sinkA); val b = surface(sinkB)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-      "bounded catch-up must land exactly the relay's rows")
+    assert(landedIds(sink) == logIds(Seq(logRoot)), "bounded catch-up must land exactly the log's rows")
   }
 
   test("admission control: maxSegmentsPerTrigger bounds each batch to N segment files, round-robin fair") {

@@ -142,6 +142,45 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(sink.stagingPath).count() == threeHours.count())
   }
 
+  test("sink in a stateless stream: the staging write runs with AQE coalescing off") {
+    val in = tmp(); val root = tmp(); val ckpt = tmp()
+    t.events.repartition(4).write.mode("overwrite").parquet(in)
+    // lateness past the data's span: nothing seals, so every job the
+    // batch runs after onBatch is the staging write
+    val sink = new HiveBatchSink(spark, root, allowedLatenessMinutes = 10 * 365 * 24 * 60)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val tag = s"coalesce-probe-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    // SQL confs reach a job's local properties; job starts reach a
+    // listener asynchronously, so a tagged marker job flushes the queue
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.test.probe")) match {
+          case Some(`tag`) => seen.add(String.valueOf(e.properties.getProperty(key)))
+          case Some(f) if f == s"$tag-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sink.streamWriter(spark.readStream.schema(t.events.schema).parquet(in), ckpt,
+          onBatch = (b, _) => b.sparkSession.sparkContext.setLocalProperty("graft.test.probe", tag))
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      sc.setLocalProperty("graft.test.probe", s"$tag-flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the flush job")
+    } finally {
+      sc.setLocalProperty("graft.test.probe", null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val flags = seen.asScala.toSeq
+    assert(flags.nonEmpty, "no staging write job was seen")
+    assert(flags.forall(_ == "false"), s"$key per staging job: $flags")
+  }
+
   test("sink: hot hour skew-splits across writer tasks, cold hours stay one file each") {
     // a hot hour arriving through many upstream tasks (AQE's skew split
     // works at map-output granularity — as it does on a real cluster)
@@ -450,20 +489,6 @@ class StreamingSpec extends SparkSpec {
       assert(batches.map(_.batchId) == batches.map(_.batchId).sorted, "batch ids not monotone")
       assert(batches.forall(b => b.numInputRows == 0 || b.processedRowsPerSecond > 0))
     } finally mon.detach(spark)
-  }
-
-  test("compaction planner flags fragmented partitions from file stats only") {
-    val root = tmp()
-    val frag = s"$root/dt=20240301/hr=00"
-    val fine = s"$root/dt=20240301/hr=01"
-    // fragmented: 8 tiny files; fine: 1 file
-    spark.range(800).repartition(8).write.mode("overwrite").parquet(frag)
-    spark.range(800).coalesce(1).write.mode("overwrite").parquet(fine)
-    val picked = graft.streaming.Compaction.planCompaction(spark, root)
-    assert(picked == Seq(("20240301", "00")), s"picked $picked")
-    // a tight target size that 8 files legitimately satisfy -> nothing picked
-    val none = graft.streaming.Compaction.planCompaction(spark, root, targetFileBytes = 1L)
-    assert(none.isEmpty, s"over-eager plan: $none")
   }
 
   test("dedup against history: a re-crawl collapses against the fingerprint store across runs") {
