@@ -18,11 +18,8 @@ object TextFunctions {
 
   /** Efraimidis–Spirakis A-ES weighted-sampling key: ln(u)/w with
     * u ∈ (0,1) derived from the content-free md5 of `id` — NOT a random
-    * draw, so runs, engines, layouts AND the streaming reservoir all
-    * select the identical sample. Shared by q105 (batch) and
-    * StreamingSample (its streaming dual): bit-identity between the two
-    * is the load-bearing invariant, so there is exactly one copy of
-    * this formula. */
+    * draw, so runs, engines and layouts all select the identical q105
+    * sample. */
   def aesKey(id: Column, weight: Column): Column = {
     val u = (conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("double") + 1.0) /
       lit(4294967297.0)

@@ -896,14 +896,14 @@ object EventAnalytics {
   }
 
   /** q95: gap sessionization via Spark's NATIVE `session_window` — the
-    * declarative dual of q22's lag-window formulation and of the
-    * streaming sessionizer. One groupBy (user × session-window) does the
-    * merge inside the aggregation operator (no per-user window sort
-    * feeding a second groupBy, and the same construct runs unchanged
-    * under `readStream` with watermark-driven state eviction — asserted
-    * in StreamingSessionizeSpec). Session span excludes the trailing gap
-    * that session_window's `end` carries (end = last event + gap), so
-    * the numbers line up with the lag/cumsum definition exactly. */
+    * declarative dual of q22's lag-window formulation. One groupBy
+    * (user × session-window) does the merge inside the aggregation
+    * operator (no per-user window sort feeding a second groupBy, and the
+    * same construct runs unchanged under `readStream` with
+    * watermark-driven state eviction). Session span excludes the
+    * trailing gap that session_window's `end` carries (end = last event
+    * + gap), so the numbers line up with the lag/cumsum definition
+    * exactly. */
   def sessionWindowNative(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val gapUs = gapMinutes.toLong * 60L * 1000000L
     val sessions = events
@@ -1166,15 +1166,13 @@ object EventAnalytics {
   }
 
   /** q198: per-user EWMA of purchase value — the recency-weighted
-    * "customer value" feature (batch dual of
-    * [[graft.streaming.StreamingEwma.userEwma]]). The recurrence
+    * "customer value" feature. The recurrence
     * s ← α·v + (1−α)·s unrolls per user to the closed-form weighted
     * sum over that user's ordered purchases: weights come from the
     * per-user rank/count windows (both PARTITIONED by user — bounded by
     * per-user activity, lint-clean at any scale), then one aggregate
     * back to user grain. No truncation: per-user purchase counts are
-    * activity-bounded, and exactness is what lets the streaming dual
-    * assert slice-invariance against this form. */
+    * activity-bounded, so the result is exact. */
   def userEwma(events: DataFrame, alpha: Double = 0.3): DataFrame = {
     val byUser = Window.partitionBy("user_id")
     val ordered = byUser.orderBy("ts", "event_id")
@@ -1627,10 +1625,7 @@ object EventAnalytics {
   def sloBurnRate(events: DataFrame, budget: Double = 0.25): DataFrame =
     burnReport(dailyErrorCounts(events), budget)
 
-  /** The daily (eday, day, n_events, n_errors) frame q337 scores —
-    * shared with the streaming monitor ([[graft.streaming
-    * .StreamingBurnRate]]), whose watermarked window aggregation must
-    * land the IDENTICAL rows for the alert report to transfer. */
+  /** The daily (eday, day, n_events, n_errors) frame q337 scores. */
   def dailyErrorCounts(events: DataFrame): DataFrame = events
     .groupBy(
       datediff(to_date(col("ts")), to_date(lit("1970-01-01"))).as("eday"),

@@ -540,8 +540,7 @@ object Relational {
     bayesAbFromCounts(bayesArmCounts(events))
 
   /** One exposure/conversion count slice per arm — four ADDITIVE longs,
-    * so micro-batch slices sum to exactly the full-corpus counts (the
-    * property the stream_bayes_ab dual rides). */
+    * so slices of the events sum to exactly the full-corpus counts. */
   private[graft] def bayesArmCounts(events: DataFrame): DataFrame =
     events.withColumn("arm", hashArm(col("user_id")))
       .agg(
@@ -550,18 +549,15 @@ object Relational {
         count(when(col("arm") === "A" && col("event_type") === "purchase", lit(1))).as("s_a"),
         count(when(col("arm") === "B" && col("event_type") === "purchase", lit(1))).as("s_b"))
 
-  /** Posterior P(A>B) from (possibly many) count slices — the shared
-    * kernel of q394 and its streaming dual: sum the counts, then the
-    * same Jeffreys-normal arithmetic, so the ship/hold threshold tuned
-    * on the batch report transfers to the live monitor unchanged.
+  /** Posterior P(A>B) from (possibly many) count slices — the q394
+    * kernel: sum the counts, then the Jeffreys-normal arithmetic.
     *
     * Small-n caveat: P(A>B) uses a NORMAL approximation to the Beta
     * posterior difference, which misstates tail probabilities exactly
-    * where the live monitor consults it earliest — the first few
-    * micro-batches. The decision therefore carries a minimum-exposure
-    * gate ([[BayesMinExposure]] per arm): below it the report stays
-    * `inconclusive` no matter how extreme the approximate posterior
-    * looks, so an early lucky streak cannot ship an arm. */
+    * where the evidence is thinnest. The decision therefore carries a
+    * minimum-exposure gate ([[BayesMinExposure]] per arm): below it the
+    * report stays `inconclusive` no matter how extreme the approximate
+    * posterior looks, so an early lucky streak cannot ship an arm. */
   private[graft] val BayesMinExposure = 100L
 
   private[graft] def bayesAbFromCounts(counts: DataFrame): DataFrame = {
@@ -967,25 +963,22 @@ object Relational {
     * Horvitz–Thompson inverse-probability estimator with its
     * Bernoulli-sampling standard error (√[(1−p)/p² · Σx²] from sampled
     * rows only). The filter evaluates at the scan, so the shuffle
-    * carries p of the table; persisted as a sample TABLE (the sink
-    * already maintains streaming samples) the SCAN is p of the table
-    * too — that is the 100 TB interactive-dashboard path. Estimator
-    * collapses to the exact answer at p = 1 (spec-asserted). */
+    * carries p of the table; persisted as a sample TABLE the SCAN is p
+    * of the table too — that is the 100 TB interactive-dashboard path.
+    * Estimator collapses to the exact answer at p = 1 (spec-asserted). */
   def approxGroupBy(orders: DataFrame, hexChars: Seq[String] = Seq("0", "1", "2", "3")): DataFrame =
     approxFromSample(
       orders.filter(hashSamplePredicate(col("o_orderkey"), hexChars)),
       hexChars.size / 16.0)
 
   /** Deterministic md5-prefix sample membership — the q55/q157 portable
-    * sampling predicate, shared with the sink's streaming sample-table
-    * maintenance ([[graft.streaming.StreamingSample.hashSampleStream]])
-    * so batch and streamed samples are the same row set by construction. */
+    * sampling predicate: the same row set on any engine and layout. */
   def hashSamplePredicate(key: Column, hexChars: Seq[String]): Column =
     substring(md5(key.cast("string")), 1, 1).isInCollection(hexChars)
 
   /** q157's estimator half: Horvitz–Thompson estimates + standard error
-    * from an ALREADY-MATERIALIZED p-sample (e.g. the sink-maintained
-    * sample table — then the scan itself is p of the data). */
+    * from an ALREADY-MATERIALIZED p-sample (e.g. a persisted sample
+    * table — then the scan itself is p of the data). */
   def approxFromSample(sample: DataFrame, p: Double): DataFrame = {
     sample
       .groupBy("o_orderpriority")

@@ -924,9 +924,7 @@ object StatTests {
   }
 
   /** The q240 featurization: one row per (feature, value) per order, via
-    * `stack` — shared with the streaming drift monitor so the batch
-    * query and the ingest-time dual score the identical cells. Keeps
-    * `o_orderdate` so callers can attach period labels. */
+    * `stack`. Keeps `o_orderdate` so callers can attach period labels. */
   private[graft] def featurizeOrders(orders: DataFrame): DataFrame =
     orders
       .select(
@@ -937,9 +935,8 @@ object StatTests {
       .select(col("o_orderdate"),
         expr("stack(3, 'price_bucket', pb, 'priority', pri, 'status', st) AS (feature, value)"))
 
-  /** PSI per feature from (feature, value, nb, nc) count cells — the
-    * smoothing and Σ(p_c−p_b)·ln(p_c/p_b) shared by q240 and the
-    * streaming drift monitor. */
+  /** PSI per feature from (feature, value, nb, nc) count cells — q240's
+    * smoothing and Σ(p_c−p_b)·ln(p_c/p_b). */
   private[graft] def psiFromCells(cells: DataFrame): DataFrame = {
     val totals = cells.groupBy("feature")
       .agg(sum("nb").as("tb"), sum("nc").as("tc"), count(lit(1)).as("k_buckets"))

@@ -1878,11 +1878,9 @@ object TextAnalysis {
   }
 
   /** The q359 kernel over PRE-AGGREGATED token-grain counts
-    * (token, cnt_a, cnt_b) — shared by the batch parity split above and
-    * the streaming monitor ([[graft.streaming.StreamingTokenDrift]]),
-    * so a threshold tuned on the batch report transfers to ingest
-    * unchanged (the stream_psi discipline). Totals are taken over the
-    * UNFILTERED counts (token mass, not surviving-token mass). */
+    * (token, cnt_a, cnt_b), fed by the batch parity split above.
+    * Totals are taken over the UNFILTERED counts (token mass, not
+    * surviving-token mass). */
   private[graft] def tokenDriftFromCounts(
       tokenCounts: DataFrame, minCount: Long, topN: Int): DataFrame = {
     val counts = tokenCounts.filter(col("cnt_a") + col("cnt_b") >= minCount)
@@ -2039,8 +2037,7 @@ object TextAnalysis {
     kappaFromCells(labelerCells(documents, lenThresh, tokThresh))
 
   /** One 2×2 contingency slice — four ADDITIVE long cells, so
-    * micro-batch slices sum to exactly the full-corpus contingency
-    * (the property the stream_labeler_kappa dual rides). */
+    * slices of the corpus sum to exactly the full-corpus contingency. */
   private[graft] def labelerCells(
       documents: DataFrame,
       lenThresh: Int = 400,
@@ -2055,10 +2052,8 @@ object TextAnalysis {
         sum(when(!col("a") && col("b"), 1L).otherwise(0L)).as("n_b_only"),
         sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).as("n_neither"))
 
-  /** κ from (possibly many) contingency slices — the shared kernel of
-    * q374 and its streaming dual: sum the cells, then the same po/pe/κ
-    * arithmetic, so a threshold tuned on the batch report transfers to
-    * ingest unchanged. */
+  /** κ from (possibly many) contingency slices — the q374 kernel: sum
+    * the cells, then the po/pe/κ arithmetic. */
   private[graft] def kappaFromCells(cells: DataFrame): DataFrame =
     cells
       .agg(

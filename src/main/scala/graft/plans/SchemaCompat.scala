@@ -72,58 +72,6 @@ object SchemaCompat {
   def compatible(reader: StructType, writer: StructType): Boolean =
     diff(reader, writer).forall(_.verdict != "breaking")
 
-  /** DATA-into-contract check — the ingest-gate direction, distinct
-    * from [[diff]]'s evolution direction (where the writer schema is a
-    * PROPOSAL to become the new contract): here the batch only has to
-    * be STORABLE under the existing contract, so stricter batch data is
-    * fine and the asymmetries flip:
-    *
-    *  - batch column missing: ok if the contract field is nullable
-    *    (filled with null), breaking if required;
-    *  - extra batch column: ok — projected away;
-    *  - batch type losslessly upcastable to the contract type
-    *    (int→long, float→double): ok; anything else: breaking;
-    *  - non-nullable batch data into a nullable contract field: ok;
-    *    nullable batch data into a REQUIRED field: breaking (the batch
-    *    may carry nulls the contract forbids). */
-  def dataDiff(contract: StructType, batch: StructType): Seq[FieldDiff] = {
-    val b = batch.fields.map(f => f.name -> f).toMap
-    val c = contract.fields.map(f => f.name -> f).toMap
-    val missing = contract.fields.filterNot(f => b.contains(f.name)).map { f =>
-      if (f.nullable)
-        FieldDiff(f.name, "missing-nullable", "filled with null", "ok")
-      else
-        FieldDiff(f.name, "missing-required",
-          s"required ${f.dataType.simpleString} absent from batch", "breaking")
-    }
-    val extra = batch.fields.filterNot(f => c.contains(f.name)).map { f =>
-      FieldDiff(f.name, "extra-dropped", s"${f.dataType.simpleString} projected away", "ok")
-    }
-    val typed = contract.fields.filter(f => b.contains(f.name)).flatMap { cf =>
-      val bf = b(cf.name)
-      val typeDiff: Option[FieldDiff] =
-        if (bf.dataType == cf.dataType) None
-        else if (widenings.contains((bf.dataType, cf.dataType)))
-          Some(FieldDiff(cf.name, "upcast-ok",
-            s"${bf.dataType.simpleString} → ${cf.dataType.simpleString}", "ok"))
-        else
-          Some(FieldDiff(cf.name, "type-mismatch",
-            s"batch ${bf.dataType.simpleString} vs contract ${cf.dataType.simpleString}",
-            "breaking"))
-      val nullDiff: Option[FieldDiff] =
-        if (bf.nullable && !cf.nullable)
-          Some(FieldDiff(cf.name, "nullable-into-required",
-            "batch may carry nulls the contract forbids", "breaking"))
-        else None
-      typeDiff.toSeq ++ nullDiff.toSeq
-    }
-    (missing ++ extra ++ typed).sortBy(d => (d.field, d.change)).toSeq
-  }
-
-  /** Ingest-gate form of [[dataDiff]]. */
-  def admissible(contract: StructType, batch: StructType): Boolean =
-    dataDiff(contract, batch).forall(_.verdict != "breaking")
-
   /** Registered surface: the events schema diffed against a
     * representative v2 evolution (narrow value to float, add optional
     * session_id, drop props, tighten user_id to required) —

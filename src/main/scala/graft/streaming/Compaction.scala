@@ -25,9 +25,6 @@ import HiveBatchSink.eachHour
   */
 object Compaction {
 
-  def sealPartition(spark: SparkSession, sink: HiveBatchSink, dt: String, hr: String): Unit =
-    sealPartitions(spark, sink, Seq((dt, hr)))
-
   /** Seal many closed partitions, by rename or by rewrite:
     *
     *   - one glob lists the staged data files of every hour in `parts`

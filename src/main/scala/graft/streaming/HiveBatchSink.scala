@@ -447,11 +447,16 @@ final class HiveBatchSink(
     * library's one composition from a source to sealed hours. The engine
     * owns the offsets: a batch is re-run under its own id after a crash
     * between the staging write and the commit, so its dynamic-overwrite
-    * staging replaces the crashed attempt's files. */
+    * staging replaces the crashed attempt's files. A stream without a
+    * `ts` column is refused here, not at its first non-empty batch. */
   def streamWriter(
       stream: DataFrame,
       checkpoint: String,
-      onBatch: (DataFrame, Long) => Unit = (_, _) => ()): DataStreamWriter[org.apache.spark.sql.Row] =
+      onBatch: (DataFrame, Long) => Unit = (_, _) => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
+    require(stream.columns.contains("ts"),
+      s"streamWriter needs a `ts` column, got [${stream.columns.mkString(", ")}]; " +
+        "a source attached before its first row may infer a schema without the payload: " +
+        "pass the payload schema with .schema(...)")
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -459,4 +464,5 @@ final class HiveBatchSink(
         writeBatch(batch, batchId).maxEventTime.foreach(ts => sealClosed(ts))
         ()
       }
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Classify, Dedup, EventAnalytics, Recommend, Relational, StatTests, TextAnalysis, TopK}
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -313,6 +314,15 @@ class AnalyticsR11Spec extends SparkSpec {
     assert(late.getAs[Double]("burn_7d") == 0.0,
       s"a RANGE frame must exclude the 8-day-old burn; rows-frame would not: $late")
     assert(!late.getAs[Boolean]("page"))
+  }
+
+  test("state is day-granular: one window row per day, not per event") {
+    val t = Tables(spark, sfDir)
+    val days = t.events.select(countDistinct(to_date(col("ts")))).head().getLong(0)
+    // the aggregation key space IS the day calendar — constant-sized
+    // state per SLO regardless of event volume
+    val daily = EventAnalytics.dailyErrorCounts(t.events)
+    assert(daily.count() == days)
   }
 
   test("q338: purchases that exactly replay yesterday's clicks → beta_xlag 1, R² 1") {

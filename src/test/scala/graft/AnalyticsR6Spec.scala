@@ -11,6 +11,8 @@ class AnalyticsR6Spec extends SparkSpec {
 
   private lazy val t = Tables(spark, sfDir)
   private def ts(s: String) = java.sql.Timestamp.valueOf(s + " 00:00:00")
+  private def ev(id: Long, minute: Long, uid: Long, typ: String, v: Double) =
+    (id, new java.sql.Timestamp(1700000000000L + minute * 60000L), uid, typ, v, "{}")
 
   test("q173: trade revenue splits by direction and excludes non-pair flows") {
     import spark.implicits._
@@ -288,6 +290,20 @@ class AnalyticsR6Spec extends SparkSpec {
     val got = EventAnalytics.windowFunnel(events).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     assert(got === Seq((1, 1L), (2, 1L), (3, 1L)))
+  }
+
+  test("hand recurrence: 3 purchases fold to α-weighted value in order") {
+    import spark.implicits._
+    val rows = Seq(
+      ev(1, 0, 1, "purchase", 10.0),
+      ev(2, 5, 1, "purchase", 20.0),
+      ev(3, 9, 1, "click", 999.0),   // non-purchase ignored
+      ev(4, 10, 1, "purchase", 30.0))
+    val df = rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val got = EventAnalytics.userEwma(df).head()
+    // s1=10, s2=.3·20+.7·10=13, s3=.3·30+.7·13=18.1
+    assert(got.getAs[Double]("ewma_value") === 18.1)
+    assert(got.getAs[Long]("n_obs") === 3L)
   }
 
   test("q199: cont interpolates, disc picks a member, mode ties break low") {

@@ -79,17 +79,4 @@ class HiveMetastoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     hive.sql("MSCK REPAIR TABLE hms_events")
     assert(hive.sql("SHOW PARTITIONS hms_events").count() == before)
   }
-
-  test("result cache fails closed on a Hive-format table it cannot snapshot") {
-    // a TEXTFILE hive table stays a HiveTableRelation in the analyzed
-    // plan (parquet/orc hive tables convert to file relations, which
-    // the cache CAN snapshot) — the fingerprint must refuse it rather
-    // than serve stale rows after a later INSERT
-    hive.sql("CREATE TABLE IF NOT EXISTS rc_refuse (a INT) STORED AS TEXTFILE")
-    val df = hive.table("rc_refuse").groupBy("a").count()
-    val leaves = df.queryExecution.analyzed.collectLeaves().map(_.nodeName)
-    assume(leaves.exists(_.contains("HiveTableRelation")), s"unexpected leaves: $leaves")
-    val e = intercept[IllegalArgumentException](graft.plans.ResultCache.fingerprint(df))
-    assert(e.getMessage.contains("non-snapshotable"), e.getMessage)
-  }
 }

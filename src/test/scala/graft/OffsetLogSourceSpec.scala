@@ -403,4 +403,13 @@ class OffsetLogSourceSpec extends SparkSpec {
     q.awaitTermination(120000)
     assert(rows <= 0, s"an empty log must not produce rows, got $rows")
   }
+
+  test("empty log: streamWriter with no schema fails at attach, naming ts") {
+    val logRoot = Files.createTempDirectory("graft-dsv2-log5").toString
+    new java.io.File(logRoot).mkdirs()
+    val sink = new HiveBatchSink(spark, Files.createTempDirectory("graft-dsv2-sink5").toString)
+    val e = intercept[IllegalArgumentException](
+      sink.streamWriter(readLog(logRoot), Files.createTempDirectory("graft-dsv2-ck5").toString))
+    assert(e.getMessage.contains("`ts`") && e.getMessage.contains(".schema("), e.getMessage)
+  }
 }

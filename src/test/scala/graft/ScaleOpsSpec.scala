@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Similarity, TopK}
-import graft.sources.{Bucketing, Tables}
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 class ScaleOpsSpec extends SparkSpec {
@@ -198,26 +198,6 @@ class ScaleOpsSpec extends SparkSpec {
       .groupBy("dt").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(got === want && got.size < nDts)
-  }
-
-  test("bucketed tables join without an Exchange in the plan") {
-    // a stale warehouse dir from a previous JVM blocks saveAsTable
-    Seq("b_orders", "b_customer").foreach { tb =>
-      spark.sql(s"DROP TABLE IF EXISTS $tb")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$tb")
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-    }
-    Bucketing.writeBucketed(t.orders, "b_orders", "o_custkey", 8)
-    Bucketing.writeBucketed(
-      t.customer.withColumnRenamed("c_custkey", "o_custkey"), "b_customer", "o_custkey", 8)
-    val joined = spark.table("b_orders")
-      .join(spark.table("b_customer").hint("merge"), "o_custkey")
-      .groupBy("c_mktsegment").count()
-    joined.collect() // force execution so AQE finalizes the plan
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("SortMergeJoin"), s"expected SMJ in:\n$plan")
-    assert(!plan.contains("Exchange hashpartitioning(o_custkey"), s"bucket co-location lost:\n$plan")
   }
 
   test("shared scan: N rollups from one scan, each view identical to its standalone groupBy") {

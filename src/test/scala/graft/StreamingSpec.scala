@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Tables
-import graft.streaming.{EventParser, HiveBatchSink, StreamingAggregates}
+import graft.streaming.{EventParser, HiveBatchSink}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -533,57 +533,6 @@ class StreamingSpec extends SparkSpec {
     docs.unpersist()
   }
 
-  test("stream-stream interval join matches the batch attribution range join") {
-    val in = tmp()
-    t.events.write.mode("overwrite").parquet(in)
-    val schema = spark.read.parquet(in).schema
-    def side(tpe: String) =
-      spark.readStream.schema(schema).parquet(in).filter(col("event_type") === tpe)
-    val q = graft.streaming.StreamingJoins.attributionJoin(side("click"), side("purchase"))
-      .writeStream.format("memory").queryName("ss_join_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("ss_join_test")
-    // batch oracle: q45 counts pairs per user over the same events
-    val batchPairs = graft.operators.EventAnalytics.attributionRangeJoin(t.events)
-      .agg(sum("n_pairs")).first().getLong(0)
-    assert(streamed.count() == batchPairs,
-      s"streamed ${streamed.count()} pairs vs batch $batchPairs")
-    // no pair violates the interval condition
-    val bad = streamed.filter(
-      col("p_ts") < col("c_ts") || col("p_ts") >= col("c_ts") + expr("INTERVAL 60 MINUTES")).count()
-    assert(bad == 0)
-  }
-
-  test("streaming watermarked hourly aggregation matches the batch rollup") {
-    val in = tmp(); val events = t.events
-    events.write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(events.schema).parquet(in)
-    val agg    = StreamingAggregates.hourlyCounts(stream)
-    val q = agg.writeStream.format("memory").queryName("hourly_test")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("hourly_test").agg(sum("n_events")).first().getLong(0)
-    assert(streamed == events.count())
-  }
-
-  test("streaming hopping windows match the batch hopping rollup") {
-    val in = tmp(); val events = t.events
-    events.write.mode("overwrite").parquet(in)
-    val stream = spark.readStream.schema(events.schema).parquet(in)
-    val agg = StreamingAggregates.hoppingCounts(stream)
-    val q = agg.writeStream.format("memory").queryName("hopping_test")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("hopping_test")
-      .select(unix_timestamp(col("window_start")).as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val batch = graft.operators.EventAnalytics.hoppingWindow(t.events)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(streamed == batch, s"streaming hopping diverged: ${streamed.size} vs ${batch.size} rows")
-  }
-
   test("change feed: maintenance ops emit a CDC log that replays to the post-state") {
     import graft.streaming.TableMaintenance
     val root = tmp(); val cl = tmp() + "/changes"
@@ -656,7 +605,7 @@ class StreamingSpec extends SparkSpec {
     // re-sealing (compaction/backfill) stamps a fresh marker → re-delivered
     Thread.sleep(5)
     sink.writeBatch(batch(Seq((1L, "2026-01-01T00:10:00Z"))), 2) // re-stage the hour
-    graft.streaming.Compaction.sealPartition(spark, sink, "20260101", "00")
+    graft.streaming.Compaction.sealPartitions(spark, sink, Seq(("20260101", "00")))
     val s3 = DoneScanner.newlySealed(spark, sink, s2.cursor)
     assert(s3.newParts == Seq(("20260101", "00")), s"got ${s3.newParts}")
   }
