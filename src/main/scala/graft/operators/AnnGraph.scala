@@ -295,29 +295,12 @@ object AnnGraph {
     * edges propagate. Old↔old edges never regenerate. Existing nodes
     * DO adopt new neighbors (the reverse direction rides the same
     * undirected expansion), so the graph converges to what a full
-    * rebuild would give on the affected neighborhoods. */
-  def nnDescentInsert(
-      graph: DataFrame,
-      allVectors: DataFrame,
-      newIds: DataFrame,
-      k: Int = 10,
-      iterations: Int = 2,
-      maxCandidates: Int = 60): DataFrame = {
-    val vecs = allVectors
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      .cache()
-    val nw = newIds.select(col("vec_id").as("id")).cache()
-    val n = vecs.count()
-    val result = insertLoop(graph, vecs, n, nw, k, iterations, maxCandidates)
-    vecs.unpersist(blocking = false)
-    nw.unpersist(blocking = false)
-    result
-  }
-
-  /** The insert loop over an ALREADY-CACHED (id, vec) corpus (count
-    * pre-measured) and cached new-id set — same cache-lifetime contract
-    * as [[buildGraph]] (r12). */
-  private[operators] def insertLoop(
+    * rebuild would give on the affected neighborhoods.
+    *
+    * Runs over an ALREADY-CACHED (id, vec) corpus (count pre-measured)
+    * and cached new-id set — same cache-lifetime contract as
+    * [[buildGraph]] (r12). */
+  private[graft] def insertLoop(
       graph: DataFrame,
       vecs: DataFrame,
       n: Long,
@@ -404,8 +387,8 @@ object AnnGraph {
     // r12: ONE cached projection of the corpus serves the cut scalar,
     // the base build (as a filtered cache view) and the insert loop —
     // the former shape scanned raw parquet for max(), cached the base
-    // inside nnDescentGraph, then cached the full corpus AGAIN inside
-    // nnDescentInsert.
+    // inside nnDescentGraph, then cached the full corpus AGAIN for the
+    // insert.
     val vecs = embeddings
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
       .cache()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PortableRound.{moneySum, round}
@@ -100,37 +100,27 @@ object EventAnalytics {
         col("min_hourly"), col("max_hourly"), col("gap_risk"))
       .orderBy("day")
 
-  /** q45: windowed attribution range join — purchases within
-    * `windowMinutes` after a click by the same user.
+  /** q45: windowed attribution range join — per user, the (click,
+    * purchase) pairs where the purchase falls in [click, click + W).
     *
-    * The naive plan is an equi-join on user_id with the time window as a
-    * post-join filter: per-user event lists grow with history, so pair
-    * expansion inside one key is quadratic — a skew bomb at 100 TB. This
-    * version *bands time into the join key*: a click's window [c, c+W)
-    * overlaps at most two W-sized bins, so the click side explodes to ≤2
-    * rows keyed (user, bin) and purchases join on their single bin.
-    * Pair expansion is then bounded per (user, window) — shuffled
-    * equi-join, no cartesian anywhere, and a (click, purchase) pair can
-    * match in only one bin (the purchase's), so no dedup pass is needed.
-    * Integer microsecond math keeps the window test exact and
-    * engine-portable. */
+    * One scan and one `user_id` shuffle: each purchase counts the clicks
+    * in its user's RANGE frame [p − (W − 1µs), p] over integer
+    * microseconds, so no pair is ever materialised and the frame state
+    * per task is one user's sliding window. `n_pairs` sums those counts;
+    * `n_purchases` counts the distinct purchase ids with at least one
+    * click. The equi-join's rules hold: rows with a null `user_id` or `ts`
+    * drop out, a click at the purchase's µs counts (RANGE peers), and a
+    * purchase exactly W after a click does not. */
   def attributionRangeJoin(events: DataFrame, windowMinutes: Int = 60): DataFrame = {
     val winUs = windowMinutes.toLong * 60L * 1000000L
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), unix_micros(col("ts")).as("c_us"))
-    val buys = events
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_micros(col("ts")).as("p_us"), col("event_id").as("purchase_id"))
-    val clickBins = clicks.withColumn(
-      "bin",
-      explode(array(floor(col("c_us") / winUs), floor(col("c_us") / winUs) + 1)))
-    val buyBins = buys.withColumn("bin", floor(col("p_us") / winUs))
-    clickBins
-      .join(buyBins, Seq("user_id", "bin"))
-      .filter(col("p_us") >= col("c_us") && col("p_us") < col("c_us") + winUs)
+    val w = Window.partitionBy("user_id").orderBy("us").rangeBetween(1L - winUs, Window.currentRow)
+    events
+      .filter(col("event_type").isin("click", "purchase") && col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("user_id"), col("event_type"), col("event_id"), unix_micros(col("ts")).as("us"))
+      .withColumn("n_clicks", count(when(col("event_type") === "click", 1)).over(w))
+      .filter(col("event_type") === "purchase" && col("n_clicks") > 0)
       .groupBy("user_id")
-      .agg(count(lit(1)).as("n_pairs"), countDistinct(col("purchase_id")).as("n_purchases"))
+      .agg(sum("n_clicks").as("n_pairs"), countDistinct(col("event_id")).as("n_purchases"))
       .orderBy("user_id")
   }
 
@@ -138,8 +128,10 @@ object EventAnalytics {
     * split equally across ALL of the user's clicks in the preceding
     * window (q45 gives the pair existence; first/last-touch give one
     * winner; linear is the ad-tech revenue-sharing model). Pairs come
-    * from the same banded range equi-join as q45 (never a per-key
-    * quadratic post-filter); the per-purchase click count is a window
+    * from a banded range equi-join: a click's window [c, c+W) overlaps
+    * at most two W-sized bins, so clicks explode to ≤2 (user, bin) rows
+    * and each purchase joins on its one bin (never a per-key quadratic
+    * post-filter, no dedup pass); the per-purchase click count is a window
     * partitioned by purchase (bounded by clicks-per-window, never
     * table-wide); credit aggregates per click day. Conservation law
     * (spec): attributed revenue ≡ Σ value of attributed purchases. */
@@ -179,7 +171,7 @@ object EventAnalytics {
     * the middle clicks share the remaining 20%; one click takes 100%,
     * two split 50/50 (the degenerate-case conventions every martech
     * implementation agrees on). Same banded range equi-join as
-    * q45/q135 (pair expansion bounded per user-window, never
+    * q135 (pair expansion bounded per user-window, never
     * quadratic); position comes from ONE row_number window partitioned
     * by purchase (bounded by clicks-per-window), tie-broken on
     * (timestamp, click id) so simultaneous clicks order identically in
@@ -226,7 +218,7 @@ object EventAnalytics {
     * `0.5^(Δt / halfLife)`, so the click nearest the purchase earns the
     * most credit (the standard decay model between q135's equal split
     * and last-touch's winner-take-all). Same banded range equi-join as
-    * q45/q135 — pair expansion bounded per (user, window), never
+    * q135 — pair expansion bounded per (user, window), never
     * quadratic; the normalizing weight sum is a window partitioned by
     * purchase (bounded by clicks-per-window). Weights use integer
     * microsecond deltas over a double power — engine-portable, and the
@@ -500,24 +492,31 @@ object EventAnalytics {
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("window_start", "event_type")
 
-  /** q76: ordered conversion funnel view → click → purchase. Each stage
-    * is a per-user aggregate of the one event type joined to the prior
-    * stage's first-completion time — three tiny user-cardinality frames,
-    * every join broadcast-able (a stage table is ≤ one row per user, and
-    * only shrinks down the funnel). The fact table is scanned once per
-    * stage with the type filter pushed to parquet. */
+  /** q76: ordered conversion funnel view → click → purchase, in one scan
+    * and one `user_id` shuffle. Chained windows over each user's events
+    * give the first view, the first click at or after it and the first
+    * purchase at or after that click; a per-user max and a count finish.
+    * The null-user group counts as a viewer, as its GROUP BY does, and
+    * never as a clicker or buyer, as the stages' equi-joins drop it.
+    * Scale trade-off: the table's three narrow event columns (user,
+    * type, ts) are shuffled once, where a join per stage re-read every
+    * hour file five times. */
   def funnel(events: DataFrame): DataFrame = {
-    def stage(tpe: String) = events.filter(col("event_type") === tpe).select("user_id", "ts")
-    val v = stage("view").groupBy("user_id").agg(min("ts").as("v_ts"))
-    val c = stage("click").join(broadcast(v), "user_id")
-      .filter(col("ts") >= col("v_ts"))
-      .groupBy("user_id").agg(min("ts").as("c_ts"))
-    val p = stage("purchase").join(broadcast(c), "user_id")
-      .filter(col("ts") >= col("c_ts"))
-      .groupBy("user_id").agg(min("ts").as("p_ts"))
-    v.agg(count(lit(1)).as("n_view_users"))
-      .crossJoin(c.agg(count(lit(1)).as("n_click_users")))
-      .crossJoin(p.agg(count(lit(1)).as("n_purchase_users")))
+    val w = Window.partitionBy("user_id")
+    def firstAfter(tpe: String, after: Column) =
+      min(when(col("event_type") === tpe && col("ts") >= after, col("ts"))).over(w)
+    events
+      .filter(col("event_type").isin("view", "click", "purchase"))
+      .select("user_id", "event_type", "ts")
+      .withColumn("v_ts", min(when(col("event_type") === "view", col("ts"))).over(w))
+      .withColumn("c_ts", firstAfter("click", col("v_ts")))
+      .withColumn("p_ts", firstAfter("purchase", col("c_ts")))
+      .groupBy("user_id")
+      .agg(max(col("event_type") === "view").as("viewed"), max("c_ts").as("c_ts"), max("p_ts").as("p_ts"))
+      .agg(
+        count(when(col("viewed"), 1)).as("n_view_users"),
+        count(when(col("user_id").isNotNull, col("c_ts"))).as("n_click_users"),
+        count(when(col("user_id").isNotNull, col("p_ts"))).as("n_purchase_users"))
   }
 
   /** q77: per-event trailing 1-hour activity via a RANGE window over
@@ -788,30 +787,30 @@ object EventAnalytics {
   }
 
   /** q121: DAU / trailing-7-day WAU ("stickiness") — the engagement
-    * rollup every growth dashboard runs, shaped for scale: raw events
-    * collapse FIRST to distinct (user, day) activity (users × days,
-    * orders of magnitude under event count); each activity row then
-    * fans out to the ≤7 window days it contributes to (a bounded
-    * explode, map-side) and the per-window-day distinct-user count
-    * runs on that — the event table is never scanned per window. Days
-    * beyond the observed range are dropped (a trailing window with no
-    * anchor day reports nothing). */
-  def dauWau(events: DataFrame): DataFrame = {
-    val activity = events.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val days = activity.select("day").distinct()
-    val contrib = activity
-      .select(col("user_id"), explode(sequence(col("day"), date_add(col("day"), 6))).as("wday"))
-      .join(days.withColumnRenamed("day", "wday"), Seq("wday"), "left_semi")
-    val wau = contrib.distinct().groupBy("wday").agg(count(lit(1)).as("wau"))
-    val dau = activity.groupBy("day").agg(count(lit(1)).as("dau"))
-    dau
-      .join(wau, dau("day") === wau("wday"))
+    * rollup every growth dashboard runs, in one scan: raw events collapse
+    * FIRST to distinct (user, day) activity (users × days, orders of
+    * magnitude under event count); each activity row fans out to the 7
+    * window days it contributes to (a bounded explode, map-side), flagged
+    * active on its own day. After one row per (user, window day), each
+    * window day's `dau` counts the active flags and `wau` the rows; the
+    * shuffles carry those activity rows, never events. Days without
+    * activity are dropped (a trailing window with no anchor day reports
+    * nothing), and so are rows without a `ts`; a null user counts as one
+    * user. */
+  def dauWau(events: DataFrame): DataFrame =
+    events
+      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
+      .select(col("user_id"), col("day"), explode(sequence(col("day"), date_add(col("day"), 6))).as("wday"))
+      .groupBy("user_id", "wday")
+      .agg(max(col("wday") === col("day")).as("active"))
+      .groupBy("wday")
+      .agg(count(when(col("active"), 1)).as("dau"), count(lit(1)).as("wau"))
+      .filter(col("dau") > 0)
       .select(
-        date_format(col("day"), "yyyy-MM-dd").as("day"),
+        date_format(col("wday"), "yyyy-MM-dd").as("day"),
         col("dau"), col("wau"),
         round(col("dau").cast("double") / col("wau"), 4).as("stickiness"))
       .orderBy("day")
-  }
 
   /** q129: sketch-table WAU — the 100 TB path under q121: per-day HLL
     * user sketches (a few KB each) are built ONCE from one event scan;

@@ -85,11 +85,19 @@ class AnnGraphSpec extends SparkSpec {
       v(10 + (c % 6)) = 0.05f * (of % 10) + 0.001f
       ((200 + i).toLong, v, c)
     }.toDF("vec_id", "embedding", "label")
-    val all = clustered.unionByName(twins)
+    // insertLoop takes a cached (id, vec) corpus and a cached new-id set
+    val vecs = clustered.unionByName(twins)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      .cache()
+    val nw = twins.select(col("vec_id").as("id")).cache()
     val graph = AnnGraph.nnDescentGraph(clustered, k = 8, iterations = 3)
-    val updated = AnnGraph.nnDescentInsert(
-      graph, all, twins.select("vec_id"), k = 8, iterations = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val updated = try {
+      AnnGraph.insertLoop(graph, vecs, vecs.count(), nw, k = 8, iterations = 3, maxCandidates = 60)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    } finally {
+      vecs.unpersist(blocking = false)
+      nw.unpersist(blocking = false)
+    }
     // inserted twins link overwhelmingly into their own cluster
     def clusterOf(id: Long): Long = if (id >= 200) (id - 200) else id / 10
     val newEdges = updated.filter(_._1 >= 200)

@@ -105,11 +105,65 @@ class PlanSpec extends SparkSpec {
     } finally prev.foreach { case (k, vOpt) => vOpt.fold(spark.conf.unset(k))(v => spark.conf.set(k, v)) }
   }
 
-  test("q45: banded range join is a shuffled equi-join, never a cartesian") {
+  test("q45: attribution is a user-partitioned RANGE window, never a cartesian") {
     val p = plan("q45_range_join")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"range join planned as a product:\n$p")
-    assert(p.contains("hashpartitioning(user_id"), s"expected (user_id, bin) equi-join shuffle in:\n$p")
+    assert(p.contains("hashpartitioning(user_id"), s"expected a user_id-partitioned window shuffle in:\n$p")
+  }
+
+  test("q45, q76 and q121 read the events table once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicLong
+    // every hour file holds every event type, so no pushed type filter can
+    // skip a file's row group and a single scan reads each row exactly once
+    val types = Seq("view", "click", "purchase", "error")
+    val events = (for { h <- 0 until 48; i <- 0 until 12 } yield {
+      val ms = (java.time.LocalDate.of(2026, 1, 1).toEpochDay * 24L + h) * 3600000L + i * 300000L
+      ((h * 12 + i).toLong, new java.sql.Timestamp(ms), ((h + i) % 7).toLong, types(i % 4), 1.0, "{}")
+    }).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
+      .withColumn("hr", date_format(col("ts"), "HH"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-one-scan").toString
+    events.repartition(col("dt"), col("hr")).write.mode("overwrite").partitionBy("dt", "hr").parquet(dir)
+    val table = spark.read.parquet(dir)
+    val rows = table.count()
+
+    val sc = spark.sparkContext
+    def recordsRead(run: => Unit): Long = {
+      val read = new AtomicLong()
+      val flushGroup = s"one-scan-flush-${System.nanoTime()}"
+      val flushed = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == flushGroup)) flushed.countDown()
+      }
+      sc.addSparkListener(listener)
+      try {
+        run
+        // task ends reach the listener before the next job's start
+        sc.setJobGroup(flushGroup, "listener flush")
+        sc.parallelize(Seq(1), 1).count()
+        assert(flushed.await(60, TimeUnit.SECONDS), "listener never saw the flush job")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      read.get()
+    }
+
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "q45_range_join" -> (df => graft.operators.EventAnalytics.attributionRangeJoin(df)),
+      "q76_funnel" -> (df => graft.operators.EventAnalytics.funnel(df)),
+      "q121_dau_wau" -> (df => graft.operators.EventAnalytics.dauWau(df)))
+    val reads = ops.map { case (name, op) => name -> recordsRead(op(table).collect()) }
+    assert(reads.forall(_._2 == rows), s"records read from a $rows-row table: ${reads.mkString(", ")}")
   }
 
   test("q25: scale-safe ntile — no single-partition window in the plan") {
@@ -271,7 +325,7 @@ class PlanSpec extends SparkSpec {
   test("every query plan lints clean of scale-killer shapes (documented idioms excepted)") {
     // deliberate idioms, each justified at its definition site:
     //  - broadcast-nested-loop-join on a 1-row aggregate (scalar-combine:
-    //    q14/q56/q74/q76/q84/q101) or a bounded broadcast query side
+    //    q14/q56/q74/q84/q101) or a bounded broadcast query side
     //    (exact-ANN baseline / re-rank / handoff: q51/q59/q63)
     //  - unpartitioned window over an input bounded by CONSTRUCTION:
     //    q72 solves over ≤ #sources rows, q89 lags a calendar-bounded
@@ -285,7 +339,6 @@ class PlanSpec extends SparkSpec {
       "q63_feature_similarity" -> bnl,
       "q65_semantic_dedup"  -> bnl, // 1-row broadcast n_total/n_members scalars (q14 idiom)
       "q74_tfidf"           -> bnl,
-      "q76_funnel"          -> bnl,
       "q84_gapfill"         -> bnl,
       "q101_join_estimate"  -> bnl,
       "q114_revenue_share"  -> bnl,
@@ -396,7 +449,7 @@ class PlanSpec extends SparkSpec {
       "q342_rolling_median" -> Set("unpartitioned-window"), // RANGE frame over the calendar-day table (q337 idiom)
       "q343_rec_coverage"   -> (bnl + "unpartitioned-window"), // 1-row scalars + slot ranking over the catalog-bounded part frame
       "q344_dup_matrix"     -> (bnl + "cartesian-product"), // #sources² zero-fill pair grid (q294/q316 idiom)
-      "q345_funnel_by_arm"  -> bnl, // 1-row per-arm scalar cross (q76/q231 idiom)
+      "q345_funnel_by_arm"  -> bnl, // 1-row per-arm scalar cross (q231 idiom)
       "q346_peaks"          -> Set("unpartitioned-window"), // lag/lead + RANGE median over the calendar-day table (q342 idiom)
       "q348_empirical_bayes" -> bnl, // 1-row method-of-moments prior scalar (q14/q319 idiom)
       "q352_seasonal_index" -> (bnl + "unpartitioned-window"), // 1-row normalizer scalar + centered MA over the #months frame (q89 idiom)

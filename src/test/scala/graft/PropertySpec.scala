@@ -383,4 +383,61 @@ class PropertySpec extends SparkSpec {
       got == want
     }, trials = 12)
   }
+
+  test("q45, q76 and q121 equal a brute-force recount on any event set (null keys, µs ties, day gaps)") {
+    val minUs = 60L * 1000000L
+    val dayUs = 24L * 60L * minUs
+    val base = java.time.LocalDate.of(2026, 1, 1).toEpochDay * dayUs
+    // a coarse grid forces what the equi-join forms define: a click and a
+    // purchase at one µs, a purchase exactly 60 min after a click, empty
+    // days inside the 7-day window, duplicate ids, null users and times
+    val evGen = for {
+      id    <- Gen.choose(0L, 25L)
+      user  <- Gen.frequency(1 -> Gen.const(Option.empty[Long]), 6 -> Gen.choose(1L, 4L).map(Option(_)))
+      tpe   <- Gen.oneOf("view", "click", "purchase", "error")
+      day   <- Gen.oneOf(0L, 1L, 2L, 6L, 7L, 15L)
+      min   <- Gen.oneOf(0L, 1L, 30L, 59L, 60L, 61L, 120L)
+      us    <- Gen.oneOf(0L, 1L)
+      hasTs <- Gen.frequency(1 -> false, 9 -> true)
+    } yield (id, user, tpe, Option.when(hasTs)(base + day * dayUs + min * minUs + us))
+    checkProp(Prop.forAll(Gen.listOfN(40, evGen)) { evs =>
+      def instant(us: Long) = java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS))
+      val df = evs.map { case (id, u, t, ts) => (id, ts.map(instant), u, t, 1.0, "{}") }
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      def times(u: Option[Long], tpe: String) =
+        evs.collect { case (_, `u`, `tpe`, Some(t)) => t }
+
+      // q76: view users by GROUP BY (null user included); later stages by equi-join
+      val viewers = evs.collect { case (_, u, "view", _) => u }.distinct
+      val vTs = viewers.map(u => u -> times(u, "view").minOption)
+      val cTs = vTs.collect { case (Some(u), Some(v)) => Some(u) -> times(Some(u), "click").filter(_ >= v).minOption }
+        .collect { case (u, Some(c)) => u -> c }
+      val pTs = cTs.flatMap { case (u, c) => times(u, "purchase").filter(_ >= c).minOption }
+      val funnelOk = EventAnalytics.funnel(df).as[(Long, Long, Long)].head() ==
+        ((viewers.size.toLong, cTs.size.toLong, pTs.size.toLong))
+
+      // q121: per observed day, distinct users that day and in the trailing 7 days
+      val active = evs.collect { case (_, u, _, Some(t)) => (u, Math.floorDiv(t, dayUs)) }.distinct
+      val wantDw = active.map(_._2).distinct.sorted.map { d =>
+        (java.time.LocalDate.ofEpochDay(d).toString, active.count(_._2 == d).toLong,
+          active.collect { case (u, a) if a <= d && a > d - 7 => u }.distinct.size.toLong)
+      }
+      val gotDw = EventAnalytics.dauWau(df).as[(String, Long, Long, Double)].collect().toSeq
+      val dauWauOk = gotDw.map(r => (r._1, r._2, r._3)) == wantDw &&
+        gotDw.forall(r => math.abs(r._4 - r._2.toDouble / r._3) <= 0.00005 + 1e-12)
+
+      // q45: every (click, purchase) pair with click <= purchase < click + 60 min
+      val wantQ45 = evs.flatMap(_._2).distinct.sorted.flatMap { u =>
+        val pairs = for {
+          c <- times(Some(u), "click")
+          (pid, _, _, Some(p)) <- evs.filter(e => e._2.contains(u) && e._3 == "purchase")
+          if p >= c && p < c + 60 * minUs
+        } yield pid
+        Option.when(pairs.nonEmpty)((u, pairs.size.toLong, pairs.distinct.size.toLong))
+      }
+      val q45Ok = EventAnalytics.attributionRangeJoin(df).as[(Long, Long, Long)].collect().toSeq == wantQ45
+
+      funnelOk && dauWauOk && q45Ok
+    }, trials = 12)
+  }
 }
