@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,6 +30,10 @@ import org.apache.spark.sql.functions._
   *   - consumer-group offsets commit atomically (temp + rename), and a
   *     committed range re-read returns the identical rows (replay).
   *
+  * The library writes the log through [[append]] alone, one writer per
+  * log; the streaming surface ([[OffsetLogSourceProvider]]) only reads
+  * it. `segments` is the one parser of the layout above.
+  *
   * Exactly-once end-to-end with the sink is the engine's handshake:
   * [[OffsetLogSourceProvider]] streams the log, the engine writes each
   * batch's range to its offset WAL before the batch runs, and
@@ -43,65 +48,67 @@ import org.apache.spark.sql.functions._
   * [[graft.streaming.SinkMonitor]]'s lag probe read. */
 object OffsetLog {
 
+  private val PartitionKey = "partition="
   private val SegRe = "segment-(\\d+)-(\\d+)\\.parquet".r
 
-  private def fs(spark: SparkSession, dir: String) =
+  /** One segment file and the offsets it holds, [start, start + count). */
+  private[sources] final case class Segment(path: Path, start: Long, count: Long) {
+    def end: Long = start + count
+  }
+
+  private[sources] def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def partDir(root: String, p: Int) = s"$root/partition=$p"
+  private def partitionDir(root: String, p: Int) = new Path(s"$root/$PartitionKey$p")
+
+  /** Partition `p`'s segments, parsed from their NAMES: one directory
+    * listing, no file opened. A partition with no directory yet holds
+    * none. Every reader of the segment layout goes through here. */
+  private[sources] def segments(f: FileSystem, root: String, p: Int): Seq[Segment] =
+    try
+      f.listStatus(partitionDir(root, p)).toSeq.flatMap { st =>
+        st.getPath.getName match {
+          case SegRe(start, count) => Some(Segment(st.getPath, start.toLong, count.toLong))
+          case _                   => None
+        }
+      }
+    catch { case _: FileNotFoundException => Nil }
+
+  /** The partition count the layout shows (max P + 1 over the
+    * `partition=P` directories), or None for a log that has none. */
+  private[sources] def discoverPartitions(spark: SparkSession, root: String): Option[Int] = {
+    val parts =
+      try fs(spark, root).listStatus(new Path(root)).map(_.getPath.getName)
+        .collect { case n if n.startsWith(PartitionKey) => n.stripPrefix(PartitionKey).toInt }
+      catch { case _: FileNotFoundException => Array.empty[Int] }
+    if (parts.isEmpty) None else Some(parts.max + 1)
+  }
+
+  private def head(segs: Seq[Segment]): Long = segs.map(_.end).foldLeft(0L)(math.max)
 
   /** Per-partition next-offset (head) — parsed from segment NAMES only. */
   def endOffsets(spark: SparkSession, root: String, numPartitions: Int): Map[Int, Long] = {
     val f = fs(spark, root)
-    (0 until numPartitions).map { p =>
-      val d = new Path(partDir(root, p))
-      val end =
-        if (!f.exists(d)) 0L
-        else
-          f.listStatus(d).map(_.getPath.getName).collect {
-            case SegRe(start, count) => start.toLong + count.toLong
-          }.foldLeft(0L)(math.max)
-      p -> end
-    }.toMap
+    (0 until numPartitions).map(p => p -> head(segments(f, root, p))).toMap
   }
 
   /** Append a batch. Rows are routed to partitions by key hash (same
     * key → same partition → per-key total order, the bus contract) and
-    * offsets continue each partition's sequence. One Spark job; one
-    * immutable segment file per non-empty partition. Returns the new
-    * end offsets. Single-writer per log (a bus has one leader per
-    * partition); concurrent appends need external coordination. */
+    * offsets continue each partition's sequence, in a deterministic
+    * order (key hash, then whole-row hash). One Spark job; one immutable
+    * segment file per non-empty partition. Returns the new end offsets.
+    * Single-writer per log (a bus has one leader per partition): an
+    * append that finds a segment already at its base fails instead of
+    * writing a second, overlapping one. */
   def append(
       spark: SparkSession,
       root: String,
       batch: DataFrame,
       keyCol: String,
-      numPartitions: Int): Map[Int, Long] =
-    appendAt(spark, root, batch, keyCol, numPartitions,
-      endOffsets(spark, root, numPartitions), skipExisting = false)
-
-  /** [[append]] with EXPLICIT base offsets and optional idempotence —
-    * the primitive the DSv2 streaming sink's epoch commit needs: a
-    * replayed epoch re-runs with the bases recorded in its intent file
-    * (NOT the current head, which a partial first attempt may have
-    * advanced), and `skipExisting = true` turns an already-present
-    * target segment into a no-op instead of a concurrent-append error.
-    * Safe because segment content is DETERMINISTIC given (rows, base):
-    * rows order by (key hash, whole-row hash), so a replay regenerates
-    * byte-compatible segments and skipping is exactly-once, not
-    * lossy. */
-  private[graft] def appendAt(
-      spark: SparkSession,
-      root: String,
-      batch: DataFrame,
-      keyCol: String,
-      numPartitions: Int,
-      bases: Map[Int, Long],
-      skipExisting: Boolean): Map[Int, Long] = {
-    val ends = bases
+      numPartitions: Int): Map[Int, Long] = {
+    val ends = endOffsets(spark, root, numPartitions)
     val endsDf = spark.createDataFrame(ends.toSeq.map { case (p, e) => (p, e) })
       .toDF("partition", "__base")
-    // deterministic intra-batch order: key hash, then whole-row hash
     val cols = batch.columns.map(col)
     val w = Window.partitionBy("partition").orderBy(col("__o1"), col("__o2"))
     val numbered = batch
@@ -123,44 +130,30 @@ object OffsetLog {
     val counts = numbered.groupBy("partition").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     counts.foreach { case (p, n) =>
-      val dest = new Path(partDir(root, p))
+      val dest = partitionDir(root, p)
       f.mkdirs(dest)
-      val files = f.listStatus(new Path(s"$tmp/partition=$p"))
+      val files = f.listStatus(partitionDir(tmp, p))
         .map(_.getPath).filter(_.getName.startsWith("part-"))
       require(files.length == 1, s"expected 1 segment file for partition $p, got ${files.length}")
       val seg = new Path(dest, f"segment-${ends(p)}%d-$n%d.parquet")
-      // rename returns false (not an exception) on HDFS when the dest
-      // already exists or the source vanished — swallowing it would
-      // delete the tmp dir below and silently lose this partition's
-      // rows. A pre-existing destination means a second writer raced
-      // this append (the log is single-writer per partition): fail loud
-      // — UNLESS this is an idempotent epoch replay (skipExisting), in
-      // which case the identical segment is already committed.
-      if (f.exists(seg))
-        require(skipExisting,
-          s"segment $seg already exists — concurrent append detected (OffsetLog is single-writer)")
-      else {
-        // Same-base guard: skipExisting's idempotence keys on the exact
-        // name (base + count). A replayed epoch that regenerated a
-        // DIFFERENT row count for this partition (non-deterministic
-        // upstream, non-replayable source) would land segment-<base>-<n'>
-        // NEXT TO segment-<base>-<n> — two segments with overlapping
-        // offset ranges, silently corrupting the log (duplicate offsets
-        // on read, inflated endOffsets). Any existing segment sharing
-        // this base with a different count is corruption: fail loud.
-        val sameBase = f.listStatus(dest).map(_.getPath.getName).collect {
-          case nm @ SegRe(start, cnt) if start.toLong == ends(p) && cnt.toLong != n => nm
-        }
-        require(sameBase.isEmpty,
-          s"partition $p already holds ${sameBase.mkString(",")} at base ${ends(p)} but this " +
-            s"append produced $n rows — overlapping offset ranges (non-deterministic replay " +
-            "or corrupt log); refusing to write a second segment at the same base")
-        require(f.rename(files.head, seg),
-          s"rename ${files.head} -> $seg failed; aborting before tmp cleanup so no rows are lost")
-      }
+      // Any segment already at this base means a second writer raced this
+      // append: fail loud. The same name would make rename return false
+      // (not throw) on HDFS, and deleting the tmp dir below would then
+      // silently lose this partition's rows; a different count would sit
+      // next to it with overlapping offsets (duplicate rows on read,
+      // inflated endOffsets).
+      val atBase = segments(f, root, p).filter(_.start == ends(p))
+      require(!atBase.exists(_.count == n),
+        s"segment $seg already exists — concurrent append detected (OffsetLog is single-writer)")
+      require(atBase.isEmpty,
+        s"partition $p already holds ${atBase.map(_.path.getName).mkString(",")} at base ${ends(p)} " +
+          s"but this append produced $n rows — overlapping offset ranges (concurrent append or " +
+          "corrupt log); refusing to write a second segment at the same base")
+      require(f.rename(files.head, seg),
+        s"rename ${files.head} -> $seg failed; aborting before tmp cleanup so no rows are lost")
     }
     f.delete(new Path(tmp), true)
-    endOffsets(spark, root, numPartitions)
+    ends.map { case (p, e) => p -> (e + counts.getOrElse(p, 0L)) }
   }
 
   /** Read [from, until) per partition. Segments are pruned BY NAME to
@@ -180,33 +173,22 @@ object OffsetLog {
       until: Map[Int, Long],
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     val f = fs(spark, root)
-    def segments(p: Int): Seq[(Path, Long, Long)] = {
-      val d = new Path(partDir(root, p))
-      if (!f.exists(d)) Seq.empty
-      else
-        f.listStatus(d).map(_.getPath).toSeq.flatMap { path =>
-          path.getName match {
-            case SegRe(start, count) => Some((path, start.toLong, count.toLong))
-            case _                   => None
-          }
-        }
-    }
-    val all = (0 until numPartitions).flatMap(segments)
-    if (all.isEmpty) {
+    val listed = (0 until numPartitions).map(p => p -> segments(f, root, p))
+    if (listed.forall(_._2.isEmpty)) {
       val s = schema.getOrElse(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("partition", org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("offset", org.apache.spark.sql.types.LongType))))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
     }
-    val paths = (0 until numPartitions).flatMap { p =>
+    val paths = listed.flatMap { case (p, segs) =>
       val lo = from.getOrElse(p, 0L)
       val hi = until.getOrElse(p, Long.MaxValue)
-      segments(p).collect { case (path, s, n) if s < hi && s + n > lo => path }
+      segs.collect { case s if s.start < hi && s.end > lo => s.path }
     }
     if (paths.isEmpty) {
       // caught up: empty frame with the log's schema (one footer read)
       val schema = spark.read.option("basePath", root)
-        .parquet(all.head._1.toString).schema
+        .parquet(listed.flatMap(_._2).head.path.toString).schema
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else {
       val fromExpr = from.foldLeft(lit(0L)) { case (acc, (p, o)) =>
@@ -299,30 +281,19 @@ object OffsetLog {
       root: String,
       numPartitions: Int,
       groups: Seq[String]): Seq[(String, Int, Long, Long, Long, Boolean)] = {
-    val heads = endOffsets(spark, root, numPartitions)
-    // retained tail: the lowest segment start per partition (0 if none)
+    // per partition: the retained tail (lowest segment start) and the
+    // head, 0 for a partition with no segment
     val f = fs(spark, root)
-    val tails = (0 until numPartitions).map { p =>
-      val d = new Path(partDir(root, p))
-      val t =
-        if (!f.exists(d)) 0L
-        else {
-          val starts = f.listStatus(d).map(_.getPath.getName).collect {
-            case SegRe(start, _) => start.toLong
-          }
-          if (starts.isEmpty) 0L else starts.min
-        }
-      p -> t
-    }.toMap
-    val rows = groups.flatMap { g =>
+    val bounds = (0 until numPartitions).map { p =>
+      val segs = segments(f, root, p)
+      (if (segs.isEmpty) 0L else segs.map(_.start).min, head(segs))
+    }
+    groups.flatMap { g =>
       val cur = committed(spark, root, g)
-      (0 until numPartitions).map { p =>
+      bounds.zipWithIndex.map { case ((t, h), p) =>
         val c = cur.getOrElse(p, 0L)
-        val h = heads.getOrElse(p, 0L)
-        val t = tails.getOrElse(p, 0L)
         (g, p, c, h, math.max(0L, h - c), c < t)
       }
     }
-    rows
   }
 }

@@ -7,11 +7,10 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,15 +22,15 @@ import org.apache.spark.util.SerializableConfiguration
   * checkpointing: the engine's offset WAL, not a consumer-group file, is
   * the cursor. [[graft.streaming.HiveBatchSink.streamWriter]] over this
   * source (or over a `unionByName` of several, committed together) is
-  * the bus → sealed-hour path.
+  * the bus → sealed-hour path. The provider is read-only: rows enter the
+  * log through [[OffsetLog.append]].
   *
   * {{{
   *   spark.readStream
   *     .format("graft.sources.OffsetLogSourceProvider")
   *     .option("path", logRoot)
   *     .option("numPartitions", "4")
-  *     .option("maxRowsPerTrigger", "100000")   // admission control (rows)
-  *     .option("maxSegmentsPerTrigger", "64")   // admission control (files)
+  *     .option("maxRowsPerTrigger", "100000")   // admission control
   *     .option("failOnDataLoss", "true")        // retention-hole posture
   *     .option("commitGroup", "ops")            // mirror cursor for lagReport
   *     .load()
@@ -82,26 +81,13 @@ class OffsetLogSourceProvider extends TableProvider {
 }
 
 private[sources] object OffsetLogSource {
-  private[sources] val SegRe = "segment-(\\d+)-(\\d+)\\.parquet".r
-
   /** Partition count: the explicit option wins; otherwise DISCOVER it
     * from the `partition=P` directory layout (max P + 1). An
     * understated explicit value would silently truncate the partition
     * set — discovery can't make that mistake, and a log that doesn't
     * exist yet falls back to 4 (matching [[OffsetLog]] callers). */
   private[sources] def resolvePartitions(explicit: Option[String], root: String): Int =
-    explicit.map(_.toInt).getOrElse {
-      val spark = SparkSession.active
-      val p = new Path(root)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(p)) 4
-      else {
-        val parts = f.listStatus(p).map(_.getPath.getName)
-          .collect { case n if n.startsWith("partition=") =>
-            n.stripPrefix("partition=").toInt }
-        if (parts.isEmpty) 4 else parts.max + 1
-      }
-    }
+    explicit.map(_.toInt).getOrElse(OffsetLog.discoverPartitions(SparkSession.active, root).getOrElse(4))
 
   /** Spark schema of the log: one segment footer (via Spark's own
     * parquet conversion) + the directory-derived partition column. An
@@ -109,14 +95,10 @@ private[sources] object OffsetLogSource {
     * two columns the log itself guarantees. */
   def logSchema(spark: SparkSession, root: String, numPartitions: Int): StructType = {
     require(root != null, "offsetlog source requires option 'path'")
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seg = (0 until numPartitions).iterator.flatMap { p =>
-      val d = new Path(s"$root/partition=$p")
-      if (!f.exists(d)) Iterator.empty
-      else f.listStatus(d).iterator.map(_.getPath).filter(x => SegRe.matches(x.getName))
-    }.take(1).toSeq
+    val f = OffsetLog.fs(spark, root)
+    val seg = (0 until numPartitions).iterator.flatMap(OffsetLog.segments(f, root, _)).take(1).toSeq
     val payload = seg.headOption match {
-      case Some(path) => spark.read.parquet(path.toString).schema
+      case Some(s) => spark.read.parquet(s.path.toString).schema
       case None => StructType(Seq(StructField("offset", LongType)))
     }
     StructType(StructField("partition", IntegerType, nullable = false) +: payload.fields.toSeq)
@@ -124,27 +106,23 @@ private[sources] object OffsetLogSource {
 }
 
 private[sources] class OffsetLogTable(tableSchema: StructType, root: String, numPartitions: Int)
-    extends Table with SupportsRead with SupportsWrite {
+    extends Table with SupportsRead {
   override def name(): String = s"offsetlog(`$root`)"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
+    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new OffsetLogWriteBuilder(root, numPartitions, info)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val maxRows = Option(options.get("maxRowsPerTrigger")).map(_.toLong)
-    val maxSegs = Option(options.get("maxSegmentsPerTrigger")).map(_.toInt)
     val failOnLoss = Option(options.get("failOnDataLoss")).forall(_.toBoolean)
     val commitGroup = Option(options.get("commitGroup")).filter(_.nonEmpty)
     maxRows.foreach(n => require(n > 0, s"maxRowsPerTrigger must be positive, got $n"))
-    maxSegs.foreach(n => require(n > 0, s"maxSegmentsPerTrigger must be positive, got $n"))
     new ScanBuilder {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = tableSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new OffsetLogMicroBatchStream(
-            tableSchema, root, numPartitions, maxRows, maxSegs, failOnLoss, commitGroup)
+            tableSchema, root, numPartitions, maxRows, failOnLoss, commitGroup)
       }
     }
   }
@@ -180,12 +158,9 @@ private[sources] class OffsetLogMicroBatchStream(
     root: String,
     numPartitions: Int,
     maxRowsPerTrigger: Option[Long] = None,
-    maxSegmentsPerTrigger: Option[Int] = None,
     failOnDataLoss: Boolean = true,
     commitGroup: Option[String] = None)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
-  import OffsetLogSource.SegRe
-
   private def spark = SparkSession.active
 
   /** Captured head at AvailableNow start: the run drains TO here in
@@ -210,17 +185,9 @@ private[sources] class OffsetLogMicroBatchStream(
     * micro-batches instead of one unbounded batch, so state stores,
     * shuffle sizes and commit units stay trigger-sized no matter how
     * far behind the consumer fell. `maxRowsPerTrigger` maps to
-    * `ReadLimit.maxRows`, `maxSegmentsPerTrigger` to
-    * `ReadLimit.maxFiles` (a segment IS one file); both compose. */
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = maxRowsPerTrigger.map(ReadLimit.maxRows).toSeq ++
-      maxSegmentsPerTrigger.map(ReadLimit.maxFiles).toSeq
-    limits match {
-      case Nil      => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many     => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
+    * `ReadLimit.maxRows`. */
+  override def getDefaultReadLimit: ReadLimit =
+    maxRowsPerTrigger.fold(ReadLimit.allAvailable())(ReadLimit.maxRows)
 
   override def reportLatestOffset(): Offset =
     LogOffsets(OffsetLog.endOffsets(spark, root, numPartitions))
@@ -234,17 +201,10 @@ private[sources] class OffsetLogMicroBatchStream(
       case Some(cap) => head.map { case (p, e) => p -> math.min(e, cap.getOrElse(p, 0L)) }
       case None => head
     }
-    def flatten(l: ReadLimit): Seq[ReadLimit] = l match {
-      case c: CompositeReadLimit => c.getReadLimits.toSeq.flatMap(flatten)
-      case o => Seq(o)
-    }
-    val bounded = flatten(limit).foldLeft(end) {
-      case (acc, r: ReadMaxRows)  => capRows(from, acc, r.maxRows())
-      case (acc, s: ReadMaxFiles) => capSegments(from, acc, s.maxFiles())
-      case (acc, _: ReadAllAvailable) => acc
-      case (acc, _) => acc // minRows etc.: no upper bound implied
-    }
-    LogOffsets(bounded)
+    LogOffsets(limit match {
+      case r: ReadMaxRows => capRows(from, end, r.maxRows())
+      case _ => end // all available: no upper bound implied
+    })
   }
 
   /** Proportional row admission: each partition advances by
@@ -271,46 +231,6 @@ private[sources] class OffsetLogMicroBatchStream(
         bumped(p) += extra; rem -= extra
       }
       end.map { case (p, _) => p -> (from.getOrElse(p, 0L) + bumped.getOrElse(p, 0L)) }
-    }
-  }
-
-  /** Segment admission: round-robin across partitions (fairness — the
-    * first partition cannot hog the budget), each grant advancing that
-    * partition's end to its next segment boundary past the cursor.
-    * Segment boundaries come from NAMES — metadata-only, like the row
-    * cap. */
-  private def capSegments(from: Map[Int, Long], end: Map[Int, Long], budget: Int): Map[Int, Long] = {
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // per partition: sorted end-boundaries of segments overlapping (from, end]
-    val boundaries: Map[Int, Seq[Long]] = (0 until numPartitions).map { p =>
-      val lo = from.getOrElse(p, 0L); val hi = end.getOrElse(p, 0L)
-      val d = new Path(s"$root/partition=$p")
-      val bs =
-        if (hi <= lo || !f.exists(d)) Nil
-        else f.listStatus(d).toSeq.flatMap { st =>
-          st.getPath.getName match {
-            case SegRe(s0, n0) =>
-              val s = s0.toLong; val e = s + n0.toLong
-              if (s < hi && e > lo) Some(math.min(e, hi)) else None
-            case _ => None
-          }
-        }.sorted
-      p -> bs
-    }.toMap
-    val granted = scala.collection.mutable.Map((0 until numPartitions).map(_ -> 0): _*)
-    var left = budget
-    var progressed = true
-    while (left > 0 && progressed) {
-      progressed = false
-      (0 until numPartitions).foreach { p =>
-        if (left > 0 && granted(p) < boundaries(p).length) {
-          granted(p) += 1; left -= 1; progressed = true
-        }
-      }
-    }
-    end.map { case (p, _) =>
-      val bs = boundaries(p); val g = granted(p)
-      p -> (if (g == 0) from.getOrElse(p, 0L) else bs(g - 1))
     }
   }
 
@@ -353,26 +273,17 @@ private[sources] class OffsetLogMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[LogOffsets].ends
     val until = end.asInstanceOf[LogOffsets].ends
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = OffsetLog.fs(spark, root)
     (0 until numPartitions).flatMap { p =>
       val lo = from.getOrElse(p, 0L)
       val hi = until.getOrElse(p, 0L)
       if (hi <= lo) Nil
       else {
-        val d = new Path(s"$root/partition=$p")
-        val splits =
-          if (!f.exists(d)) Nil
-          else f.listStatus(d).toSeq.flatMap { st =>
-            st.getPath.getName match {
-              case SegRe(s0, n0) =>
-                val s = s0.toLong; val n = n0.toLong
-                // overlap prune by NAME, clamp the range per segment
-                if (s < hi && s + n > lo)
-                  Some(SegmentSplit(st.getPath.toString, p, math.max(lo, s), math.min(hi, s + n)))
-                else None
-              case _ => None
-            }
-          }
+        // overlap prune by NAME, clamp the range per segment
+        val splits = OffsetLog.segments(f, root, p).collect {
+          case s if s.start < hi && s.end > lo =>
+            SegmentSplit(s.path.toString, p, math.max(lo, s.start), math.min(hi, s.end))
+        }
         // RETENTION × WAL seam: segments are contiguous by
         // construction, so any hole in [lo, hi) means Retention expired
         // data this cursor never consumed. Fail LOUD by default (the

@@ -46,10 +46,10 @@ object Erasure {
   }
 
   /** Partition-scoped predicate delete on one parquet directory laid
-    * out by `partCols`. Affected partitions with survivors rewrite via
-    * dynamic overwrite; fully-matched partitions have their directories
-    * removed. Rows where the predicate is NULL are kept (DELETE
-    * semantics, same as the sealed path). */
+    * out by `partCols` ([[TableMaintenance.deletePartitions]]): affected
+    * partitions with survivors rewrite via dynamic overwrite, emptied
+    * ones lose their directories. Rows where the predicate is NULL are
+    * kept (DELETE semantics, same as the sealed path). */
   private def sweepDir(
       spark: SparkSession,
       path: String,
@@ -63,37 +63,17 @@ object Erasure {
     val hit = coalesce(predicate, lit(false))
     val sep = "\u0001" // never appears in dt/hr/ingest_batch values
     val pkey = concat_ws(sep, partCols.map(c => col(c).cast("string")): _*)
-    val counts: Map[Seq[String], (Long, Long)] = df
-      .groupBy(partCols.map(col): _*)
-      .agg(count(when(hit, lit(1))).as("matched"), count(lit(1)).as("total"))
-      .filter(col("matched") > 0)
-      .collect()
-      .map(r => partCols.map(c => String.valueOf(r.getAs[Any](c)))
-        -> (r.getAs[Long]("matched"), r.getAs[Long]("total")))
-      .toMap
-    if (counts.isEmpty) return SurfaceReport(0L, 0, 0)
-    val emptied = counts.filter { case (_, (m, t)) => m == t }.keySet
-    val toRewrite = counts.keySet -- emptied
-    if (toRewrite.nonEmpty) {
-      df.filter(pkey.isInCollection(toRewrite.toSeq.map(_.mkString(sep))))
-        .filter(!hit)
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy(partCols: _*)
-        .parquet(path)
+    TableMaintenance.deletePartitions(fs, path, df, partCols, hit) { m =>
+      if (m.kept.nonEmpty)
+        df.filter(pkey.isInCollection(m.kept.map(_.mkString(sep))))
+          .filter(!hit)
+          .write
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite")
+          .partitionBy(partCols: _*)
+          .parquet(path)
+    }.fold(SurfaceReport(0L, 0, 0)) { case (m, _) =>
+      SurfaceReport(removed = m.rows, partitionsRewritten = m.kept.size, partitionsDropped = m.emptied.size)
     }
-    emptied.foreach { values =>
-      val dir = new Path(path, partCols.zip(values).map { case (c, v) => s"$c=$v" }.mkString("/"))
-      fs.delete(dir, true)
-      // an hour (and a day) left with no batch goes too: a seal would
-      // otherwise find the empty hour and publish it
-      Iterator.iterate(dir.getParent)(_.getParent).take(partCols.size - 1)
-        .takeWhile(fs.listStatus(_).isEmpty).foreach(fs.delete(_, false))
-    }
-    SurfaceReport(
-      removed = counts.values.map(_._1).sum,
-      partitionsRewritten = toRewrite.size,
-      partitionsDropped = emptied.size)
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import HiveBatchSink.{hours, withDirKeys, withHourKeys}
@@ -41,37 +42,67 @@ object TableMaintenance {
       sink: HiveBatchSink,
       predicate: Column,
       changeLog: Option[(String, Long)] = None): MaintenanceStats = {
-    val table = readForRewrite(spark, sink)
-    // discovery: matched + total rows per partition in one pruned scan —
-    // output is O(affected partitions); total tells apart "rewrite" from
-    // "the whole hour is gone" (dynamic overwrite can't express empty)
-    val counts = table
-      .groupBy("dt", "hr")
-      .agg(
-        count(when(coalesce(predicate, lit(false)), lit(1))).as("matched"),
-        count(lit(1)).as("total"))
-      .filter(col("matched") > 0)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    if (counts.isEmpty) return MaintenanceStats(Seq.empty, 0L, 0L)
-    val affected = counts.keySet.toSeq.sorted
-    // NB: Map.collect returning a tuple would rebuild a Map keyed by dt
-    // and silently collapse hours of the same day — filter + keySet
-    val emptied: Set[(String, String)] = counts.filter { case (_, (m, tot)) => m == tot }.keySet
-    // CDC capture must happen BEFORE the rewrite destroys the rows
-    changeLog.foreach { case (path, changeId) =>
-      recordChanges(path, changeId,
-        sink.readHours(sink.tablePath, affected).filter(coalesce(predicate, lit(false))), "delete")
-    }
-    // build the survivor slice only when some partition keeps rows — a
-    // zero-path read throws at construction
-    val kept =
-      if (affected.forall(emptied)) { removeAndRefresh(spark, sink, emptied); 0L }
-      else {
-        val survivors = sink.readHours(sink.tablePath, affected.filterNot(emptied))
-          .filter(!coalesce(predicate, lit(false)))
-        rewrite(spark, sink, survivors, affected, emptied)
+    val hit = coalesce(predicate, lit(false))
+    def hoursOf(parts: Seq[Seq[String]]) = parts.map { case Seq(dt, hr) => (dt, hr) }
+    deletePartitions(sink.fs, sink.tablePath, readForRewrite(spark, sink), Seq("dt", "hr"), hit) { m =>
+      // CDC capture must happen BEFORE the rewrite destroys the rows
+      changeLog.foreach { case (path, changeId) =>
+        recordChanges(path, changeId,
+          sink.readHours(sink.tablePath, hoursOf(m.kept ++ m.emptied)).filter(hit), "delete")
       }
-    MaintenanceStats(affected, counts.values.map(_._1).sum, kept)
+      // build the survivor slice only when some partition keeps rows — a
+      // zero-path read throws at construction
+      if (m.kept.isEmpty) 0L
+      else rewrite(sink, sink.readHours(sink.tablePath, hoursOf(m.kept)).filter(!hit), hoursOf(m.kept))
+    } match {
+      case None => MaintenanceStats(Seq.empty, 0L, 0L)
+      case Some((m, written)) =>
+        spark.catalog.refreshByPath(sink.tablePath)
+        MaintenanceStats(hoursOf(m.kept ++ m.emptied).sorted, m.rows, written)
+    }
+  }
+
+  /** What a partition-scoped delete matched: the row count, and the
+    * partitions (as `partCols` values) that keep rows and that it empties. */
+  private[streaming] final case class Matched(rows: Long, kept: Seq[Seq[String]], emptied: Seq[Seq[String]])
+
+  /** The discovery and clean-up of a partition-scoped delete on `df`, a
+    * read of the directory `root` laid out by `partCols`; shared by
+    * [[deleteWhere]] and [[Erasure]]'s staging and quarantine sweeps.
+    * One aggregate finds each partition holding a row where `hit` is
+    * true, with its matched and total counts — output is O(affected
+    * partitions), and the total tells "rewrite" from "the whole
+    * partition is gone". `rewrite` then writes the survivors of the
+    * `kept` partitions. Dynamic overwrite cannot express an empty
+    * partition, so the emptied ones' directories are deleted after it,
+    * together with any parent they leave empty (a seal would otherwise
+    * find an empty hour and publish it). None, with nothing changed,
+    * when no row matches. */
+  private[streaming] def deletePartitions[A](
+      fs: FileSystem,
+      root: String,
+      df: DataFrame,
+      partCols: Seq[String],
+      hit: Column)(rewrite: Matched => A): Option[(Matched, A)] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val counts = df
+      .groupBy(partCols.map(col): _*)
+      .agg(count(when(hit, lit(1))).as("matched"), count(lit(1)).as("total"))
+      .filter(col("matched") > 0)
+      .collect()
+      .map(r => partCols.map(c => String.valueOf(r.getAs[Any](c)))
+        -> (r.getAs[Long]("matched"), r.getAs[Long]("total")))
+    if (counts.isEmpty) return None
+    val (emptied, kept) = counts.partition { case (_, (m, t)) => m == t }
+    val matched = Matched(counts.map(_._2._1).sum, kept.map(_._1).toSeq.sorted, emptied.map(_._1).toSeq.sorted)
+    val out = rewrite(matched)
+    matched.emptied.foreach { values =>
+      val dir = new Path(root, partCols.zip(values).map { case (c, v) => s"$c=$v" }.mkString("/"))
+      fs.delete(dir, true)
+      Iterator.iterate(dir.getParent)(_.getParent).take(partCols.size - 1)
+        .takeWhile(fs.listStatus(_).isEmpty).foreach(fs.delete(_, false))
+    }
+    Some((matched, out))
   }
 
   /** Upsert `updates` (full-width rows) by `keyCols`: existing rows with
@@ -111,7 +142,8 @@ object TableMaintenance {
     val merged = current.fold(keyed)(c =>
       c.join(broadcast(keyed.select(keyCols.map(col): _*).distinct()), keyCols, "left_anti")
         .unionByName(keyed))
-    val written = rewrite(spark, sink, merged, affected)
+    val written = rewrite(sink, merged, affected)
+    spark.catalog.refreshByPath(sink.tablePath)
     MaintenanceStats(affected, replaced, written)
   }
 
@@ -135,18 +167,11 @@ object TableMaintenance {
     withDirKeys(sink.readTable())
   }
 
-  /** Dynamic-overwrite `content` into the affected partitions, remove
-    * `emptied` dirs (dynamic overwrite only touches partitions present
-    * in the new content, so a fully-emptied hour keeps its stale files
-    * unless removed explicitly — same rule as Backfill's retracted-hour
-    * prune), restore the done markers on the rest. Returns the written
-    * row count (rides the write as observe()). */
-  private def rewrite(
-      spark: SparkSession,
-      sink: HiveBatchSink,
-      content: DataFrame,
-      affected: Seq[(String, String)],
-      emptied: Set[(String, String)] = Set.empty): Long = {
+  /** Dynamic-overwrite `content` into the `affected` partitions and
+    * restore their done markers (the overwrite clears each hour it
+    * writes). Returns the written row count (rides the write as
+    * observe()). */
+  private def rewrite(sink: HiveBatchSink, content: DataFrame, affected: Seq[(String, String)]): Long = {
     val obs = org.apache.spark.sql.Observation()
     content
       .observe(obs, count(lit(1)).as("written"))
@@ -157,14 +182,7 @@ object TableMaintenance {
       .partitionBy("dt", "hr")
       .format(sink.sealFormat)
       .save(sink.tablePath)
-    val written = obs.get("written").asInstanceOf[Long]
-    sink.markSealed(affected.filterNot(emptied))
-    removeAndRefresh(spark, sink, emptied)
-    written
-  }
-
-  private def removeAndRefresh(spark: SparkSession, sink: HiveBatchSink, emptied: Set[(String, String)]): Unit = {
-    sink.dropHours(sink.tablePath, emptied.toSeq)
-    spark.catalog.refreshByPath(sink.tablePath)
+    sink.markSealed(affected)
+    obs.get("written").asInstanceOf[Long]
   }
 }

@@ -113,76 +113,4 @@ class EndToEndPipelineSpec extends SparkSpec {
     assert(canon(TextAnalysis.sourceDataCard(streamedDocs))
       == canon(TextAnalysis.sourceDataCard(referenceDocs)), "data card diverges")
   }
-
-  test("two-hop exactly-once COMPOSES: bus A -> parse -> DSv2 sink bus B (killed and restarted mid-drain) -> HiveBatchSink equals the no-bus reference") {
-    val fmt = classOf[OffsetLogSourceProvider].getName
-    val events = Tables(spark, sfDir).events
-    val n = events.count()
-
-    // ---- publish the wire form to bus A
-    val logA = Files.createTempDirectory("graft-e2e2-logA").toString
-    val lines = events.select(col("user_id").as("k"), EventParser.lineColumn().as("value"))
-    OffsetLog.append(spark, logA, lines, "k", P)
-
-    // ---- hop 1: readStream(A) -> parse -> DSv2 writeStream sink(B),
-    // admission-controlled so the drain spans several epochs — KILLED
-    // after the first committed epochs, then restarted on the same
-    // checkpoint. The crash lands BETWEEN the two hops: exactly the
-    // seam where a non-idempotent mirror would duplicate bus B.
-    val logB = Files.createTempDirectory("graft-e2e2-logB").toString
-    val ck1 = Files.createTempDirectory("graft-e2e2-ck1").toString
-    val cap = math.max(1L, n / 6)
-    def hop1(trigger: Trigger) = {
-      val typed = EventParser.wellFormed(EventParser.parseLines(
-        spark.readStream.format(fmt)
-          .option("path", logA).option("numPartitions", P.toString)
-          .option("maxRowsPerTrigger", cap.toString)
-          .load()
-          .select("value")))
-      typed.writeStream.format(fmt)
-        .option("path", logB).option("numPartitions", P.toString)
-        .option("keyColumn", "user_id")
-        .option("checkpointLocation", ck1)
-        .trigger(trigger)
-        .start()
-    }
-    val q1 = hop1(Trigger.ProcessingTime(0))
-    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-    while (q1.recentProgress.count(_.numInputRows > 0) < 2 && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    q1.stop() // hard kill between epochs
-    q1.awaitTermination(60000)
-    val bAfterKill = OffsetLog.endOffsets(spark, logB, P).values.sum
-    assert(bAfterKill > 0 && bAfterKill < n,
-      s"the kill must land mid-drain for the restart to mean anything: $bAfterKill of $n")
-
-    val q1b = hop1(Trigger.AvailableNow())
-    q1b.awaitTermination(240000)
-    val bFinal = OffsetLog.endOffsets(spark, logB, P).values.sum
-    assert(bFinal == n, s"bus B must hold each row exactly once after restart: $bFinal != $n")
-
-    // ---- hop 2: readStream(B) -> exactly-once HiveBatchSink
-    val sink = new HiveBatchSink(spark,
-      Files.createTempDirectory("graft-e2e2-sink").toString)
-    val typedB = spark.readStream.format(fmt)
-      .option("path", logB).option("numPartitions", P.toString)
-      .option("maxRowsPerTrigger", cap.toString)
-      .load()
-      .drop("partition", "offset")
-    val q2 = sink
-      .streamWriter(typedB, Files.createTempDirectory("graft-e2e2-ck2").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination(240000)
-
-    // ---- the landed table is byte-equal to the no-bus reference
-    val payload = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    val landed = sink.readTable().select(payload.map(col): _*)
-      .unionByName(spark.read.parquet(sink.stagingPath).select(payload.map(col): _*))
-    val reference = EventParser.wellFormed(EventParser.parseLines(
-      lines.select("value"))).select(payload.map(col): _*)
-    assert(landed.count() == n, "two-hop landing must be exactly-once")
-    assert(landed.exceptAll(reference).isEmpty && reference.exceptAll(landed).isEmpty,
-      "two hops + a mid-chain crash/restart must be semantically invisible")
-  }
 }

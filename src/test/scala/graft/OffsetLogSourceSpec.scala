@@ -186,7 +186,7 @@ class OffsetLogSourceSpec extends SparkSpec {
     assert(rows == 60, s"discovery must cover all $P partitions, read $rows rows")
   }
 
-  test("admission control: a backlog drains in >=3 bounded micro-batches and lands the relay's exact table") {
+  test("admission control: a backlog drains in >=3 bounded micro-batches and lands exactly the log's rows") {
     val logRoot = Files.createTempDirectory("graft-dsv2-ac1").toString
     val events = Tables(spark, sfDir).events
     // preload the WHOLE backlog before the consumer ever attaches — the
@@ -220,38 +220,6 @@ class OffsetLogSourceSpec extends SparkSpec {
     assert(sizes.forall(_ <= cap), s"a batch exceeded maxRowsPerTrigger=$cap: $sizes")
     assert(sizes.sum == n, s"capped drain lost/duplicated rows: ${sizes.sum} != $n")
     assert(landedIds(sink) == logIds(Seq(logRoot)), "bounded catch-up must land exactly the log's rows")
-  }
-
-  test("admission control: maxSegmentsPerTrigger bounds each batch to N segment files, round-robin fair") {
-    val logRoot = Files.createTempDirectory("graft-dsv2-ac2").toString
-    val events = Tables(spark, sfDir).events
-    // 3 appends x P partitions = up to 3P segments in the backlog
-    val e1 = events.limit(90)
-    val rest = events.exceptAll(e1)
-    OffsetLog.append(spark, logRoot, e1, "user_id", P)
-    OffsetLog.append(spark, logRoot, rest.limit(90), "user_id", P)
-    OffsetLog.append(spark, logRoot, rest.exceptAll(rest.limit(90)).limit(90), "user_id", P)
-
-    val batches = java.util.Collections.synchronizedList(new java.util.ArrayList[Long]())
-    val q = spark.readStream.format(fmt)
-      .option("path", logRoot)
-      .option("numPartitions", P.toString)
-      .option("maxSegmentsPerTrigger", P.toString) // one append-wave per trigger
-      .load()
-      .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft-dsv2-ac2-ck").toString)
-      .foreachBatch { (b: DataFrame, _: Long) => batches.add(b.count()); () }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(180000)
-    import scala.jdk.CollectionConverters._
-    val sizes = batches.asScala.toSeq.filter(_ > 0)
-    assert(sizes.length >= 3,
-      s"3 append-waves at maxSegmentsPerTrigger=$P must take >=3 triggers, got $sizes")
-    assert(sizes.sum == 270, s"segment-capped drain lost/duplicated rows: $sizes")
-    // round-robin fairness: each capped batch spans at most one
-    // append-wave per partition, so no batch exceeds one wave's 90 rows
-    assert(sizes.forall(_ <= 90), s"a batch crossed wave boundaries unfairly: $sizes")
   }
 
   test("retention hole in the unconsumed range: fails loud by default, skips cleanly when opted out") {
@@ -411,5 +379,21 @@ class OffsetLogSourceSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       sink.streamWriter(readLog(logRoot), Files.createTempDirectory("graft-dsv2-ck5").toString))
     assert(e.getMessage.contains("`ts`") && e.getMessage.contains(".schema("), e.getMessage)
+  }
+
+  test("the log is read-only: writeStream to it fails at start() and appends no segment") {
+    val source = Files.createTempDirectory("graft-dsv2-ro-src").toString
+    val target = Files.createTempDirectory("graft-dsv2-ro-dst").toString
+    OffsetLog.append(spark, source, Tables(spark, sfDir).events.limit(20), "user_id", P)
+    val writer = readLog(source).drop("partition", "offset").writeStream.format(fmt)
+      .option("path", target)
+      .option("numPartitions", P.toString)
+      .option("keyColumn", "user_id")
+      .option("checkpointLocation", Files.createTempDirectory("graft-dsv2-ro-ck").toString)
+      .trigger(Trigger.AvailableNow())
+    val started = scala.util.Try(writer.start())
+    started.foreach(_.awaitTermination(120000))
+    assert(started.isFailure, "writeStream into an offset log must be refused at start()")
+    assert(OffsetLog.endOffsets(spark, target, P).values.sum == 0, "no segment may land in the target log")
   }
 }
