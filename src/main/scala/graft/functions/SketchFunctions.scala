@@ -34,8 +34,8 @@ object SketchFunctions {
     toColumn(
       graft.plans.TDigestMergeQuantile(expression(sketches), Literal(p)).toAggregateExpression())
 
-  /** Aggregate a key column into a serialized Bloom filter (the
-    * membership half of the zone-map side table). */
+  /** Aggregate a key column into a serialized Bloom filter, the build
+    * side of [[graft.operators.BloomJoin]]'s runtime filter. */
   def bloomSketch(c: Column, expectedItems: Long, fpp: Double = 0.01): Column =
     toColumn(
       graft.plans.BloomSketch(expression(c), Literal(expectedItems), Literal(fpp))

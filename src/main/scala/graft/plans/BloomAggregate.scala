@@ -10,24 +10,17 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
 /** `bloom_sketch(col, expectedItems, fpp)` — aggregate a key column into
-  * a serialized Bloom filter (binary), the membership companion to the
-  * min/max zone map ([[graft.sources.ZoneMap]]).
-  *
-  * Min/max stats prune RANGE predicates, but a point lookup on a
-  * high-cardinality column that spans every partition (user_id over a
-  * time-partitioned table) passes every [min, max] test and scans
-  * everything. A per-partition Bloom filter answers "can this partition
-  * contain value X?" with no false negatives and fpp false positives, so
-  * the side-table lookup rules out the ~all partitions that don't hold
-  * the key — the same trick as Parquet column bloom filters, hoisted to
-  * partition granularity where it prunes whole directories instead of
-  * row groups.
+  * a serialized Bloom filter (binary): "can this key occur in the
+  * aggregated rows?" with no false negatives and fpp false positives.
+  * [[graft.operators.BloomJoin]] builds one over a join's selective side
+  * and probes it with [[BloomMightContain]], so fact rows that cannot
+  * match are dropped at the scan.
   *
   * Built on `org.apache.spark.util.sketch.BloomFilter` (the engine's own
   * sketch, same bit layout as its runtime join filters): partial filters
   * OR-merge associatively on the reduce side, so the build is one
-  * aggregation pass however large the table. Size the filter from the
-  * expected DISTINCT keys per partition: ~1.2 KB per 1k keys at 1% fpp.
+  * aggregation pass however large the input. Size the filter from the
+  * expected DISTINCT keys: ~1.2 KB per 1k keys at 1% fpp.
   */
 case class BloomSketch(
     child: Expression,
@@ -46,8 +39,8 @@ case class BloomSketch(
     case other     => throw new IllegalArgumentException(s"bad fpp: $other")
   }
 
-  /** Insert matched once to the resolved input type — the same encodings
-    * [[BloomZone.mightContain]] probes with. */
+  /** Insert matched once to the resolved input type: integral keys as
+    * longs, which is how [[BloomMightContain]] probes them. */
   private lazy val put: (BloomFilter, Any) => Unit = child.dataType match {
     case LongType    => (bf, v) => bf.putLong(v.asInstanceOf[Long])
     case IntegerType => (bf, v) => bf.putLong(v.asInstanceOf[Int].toLong)
@@ -102,29 +95,7 @@ case class BloomSketch(
     copy(child = newChildren(0), expectedExpression = newChildren(1), fppExpression = newChildren(2))
 }
 
-/** Probe side of [[BloomSketch]] — deserialize once, test many values
-  * with the value encodings `update` inserted. Driver-side by design:
-  * the zone-map side table is O(partitions) rows, so membership tests
-  * happen where the partition list is assembled, not in a per-row
-  * expression that would re-parse the filter bits every row. */
-object BloomZone {
-  def deserialize(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-
-  def mightContain(bf: BloomFilter, value: Any): Boolean = value match {
-    case l: Long        => bf.mightContainLong(l)
-    case i: Int         => bf.mightContainLong(i.toLong)
-    case s: Short       => bf.mightContainLong(s.toLong)
-    case b: Byte        => bf.mightContainLong(b.toLong)
-    case s: String      => bf.mightContainBinary(s.getBytes("UTF-8"))
-    case u: UTF8String  => bf.mightContainBinary(u.getBytes)
-    case b: Array[Byte] => bf.mightContainBinary(b)
-    case other          => throw new IllegalArgumentException(s"unsupported probe type: $other")
-  }
-}
-
-/** Row-level probe of a [[BloomSketch]]-built filter — the runtime-filter
-  * companion to the driver-side [[BloomZone]] partition probe.
+/** Row-level probe of a [[BloomSketch]]-built filter.
   *
   * `bloom_might_contain(filterBytes, key)` tests an integral key against
   * a filter built over the SELECTIVE side of a join and broadcast into

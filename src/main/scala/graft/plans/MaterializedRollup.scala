@@ -153,9 +153,8 @@ object MaterializedRollup {
   }
 
   /** Incremental view maintenance — sync the rollup from a ROW-LEVEL
-    * delta feed (`op` = insert | delete rows in the source schema:
-    * [[graft.streaming.SnapshotStore.diff]] output, or the table-
-    * maintenance/retention CDC feeds) instead of rebuilding from the
+    * delta feed (`op` = insert | delete rows in the source schema: the
+    * table-maintenance/retention CDC feeds) instead of rebuilding from the
     * fact table. Call AFTER the delta has been applied to the source
     * (the normal order: maintenance rewrites the table, captures the
     * feed, then downstream views sync from the feed).

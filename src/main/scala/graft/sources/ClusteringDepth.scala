@@ -5,10 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PortableRound.round
 
-/** q393: file CLUSTERING-DEPTH report — the measurement half of the
-  * layout toolchain (SortedWrites/zorder_write CREATE clustered
-  * layouts; ZoneMap PRUNES on them; this answers "is the table still
-  * clustered, and how much does a point lookup pay?"). For a sort key:
+/** q393: file CLUSTERING-DEPTH report — "is the table clustered on
+  * this key, and how much does a point lookup pay?". For a sort key:
   * per-file [min, max] ranges (one scan, min/max are
   * map-side-combinable), then a boundary SWEEP — at each file's open
   * boundary, the running open−close sum IS the number of file ranges
@@ -17,8 +15,8 @@ import graft.functions.PortableRound.round
   * table has depth ≈ #files (every lookup reads everything).
   *
   * Scale shape: the sweep window is over 2·#files METADATA rows —
-  * file-count-sized, never data-sized (the zone-map idiom); the only
-  * data-sized work is the min/max scan. */
+  * file-count-sized, never data-sized; the only data-sized work is the
+  * min/max scan. */
 object ClusteringDepth {
 
   def report(spark: SparkSession, dir: String, column: String): DataFrame = {
@@ -78,8 +76,8 @@ object ClusteringDepth {
     * per candidate (bounded list — one min/max scan each), ranked by
     * the point-scan share ascending. The top row is the column whose
     * current layout already prunes best; a flat column ranking near
-    * 1.0 everywhere says the table needs a sorted rewrite
-    * (SortedWrites/zorder_write) before zone maps can help. */
+    * 1.0 everywhere says no candidate's layout lets file min/max
+    * statistics skip files for a point lookup. */
   def sortAdvisor(spark: SparkSession, dir: String, columns: Seq[String]): DataFrame =
     columns
       .map(c => report(spark, dir, c).withColumn("column", lit(c)))

@@ -236,9 +236,9 @@ private[sources] class OffsetLogMicroBatchStream(
 
   override def deserializeOffset(json: String): Offset = LogOffsets.parse(json)
 
-  /** Segments are immutable and retention is a log policy
-    * ([[graft.streaming.Retention]]), not a consumer's — nothing to
-    * release on commit; the engine's WAL is the durable cursor.
+  /** Segments are immutable, and removing old ones is done outside the
+    * library, not by a consumer: nothing to release on commit; the
+    * engine's WAL is the durable cursor.
     *
     * With `commitGroup` set, the committed range is ALSO mirrored into
     * the log's consumer-group cursor file — purely observational (a
@@ -284,12 +284,13 @@ private[sources] class OffsetLogMicroBatchStream(
           case s if s.start < hi && s.end > lo =>
             SegmentSplit(s.path.toString, p, math.max(lo, s.start), math.min(hi, s.end))
         }
-        // RETENTION × WAL seam: segments are contiguous by
-        // construction, so any hole in [lo, hi) means Retention expired
-        // data this cursor never consumed. Fail LOUD by default (the
-        // Kafka failOnDataLoss posture) — silent skipping turns a
-        // lifecycle misconfiguration into quiet row loss; opt out with
-        // failOnDataLoss=false to resume from what remains.
+        // removed segments × WAL seam: segments are contiguous by
+        // construction, so any hole in [lo, hi) means segments this
+        // cursor never consumed were removed from the log outside the
+        // library. Fail LOUD by default (the Kafka failOnDataLoss
+        // posture) — silent skipping turns a lifecycle misconfiguration
+        // into quiet row loss; opt out with failOnDataLoss=false to
+        // resume from what remains.
         val sorted = splits.sortBy(_.from)
         var cursor = lo
         val gaps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
@@ -301,8 +302,8 @@ private[sources] class OffsetLogMicroBatchStream(
         if (gaps.nonEmpty && failOnDataLoss)
           throw new IllegalStateException(
             s"offsetlog data loss: partition=$p offsets ${gaps.map { case (a, b) => s"[$a,$b)" }.mkString(", ")} " +
-              s"were expired by retention before this consumer read them (root=$root). " +
-              "Raise the retention window or restart with failOnDataLoss=false to skip the hole.")
+              s"were removed from the log before this consumer read them (root=$root). " +
+              "Keep segments until every consumer has read them, or restart with failOnDataLoss=false to skip the hole.")
         splits
       }
     }.toArray

@@ -36,9 +36,10 @@ object Compaction {
     *   - REWRITE: the other hours (several staged files, an ORC or text
     *     seal, a call whose schemas differ) are read and shuffled once on
     *     (dt, hr), one file per hour, then dynamic-overwritten into the
-    *     table in ONE Spark job: O(1) jobs per call however many hours
-    *     close. When the footers agree the read takes their schema, so
-    *     no inference job runs; otherwise file schemas are merged;
+    *     table ([[HiveBatchSink.overwriteHours]]) in ONE Spark job: O(1)
+    *     jobs per call however many hours close. When the footers agree
+    *     the read takes their schema, so no inference job runs; otherwise
+    *     file schemas are merged;
     *   - ROLL FORWARD: an hour whose staged files are all gone was
     *     renamed by a seal that stopped before its marker; it is not
     *     read, only marked and dropped;
@@ -60,19 +61,11 @@ object Compaction {
       .partition(p => sink.sealFormat == "parquet" && schema.isDefined && staged(p).size == 1)
     if (rewritten.nonEmpty) {
       val read = sink.readHours(sink.stagingPath, rewritten, schema)
-      val toSeal =
+      sink.overwriteHours(
         if (sink.sealFormat == "text")
           // the reference's Hive load shape: delimited event lines
           read.select(EventParser.lineColumn().as("value"), col("dt"), col("hr"))
-        else read
-      toSeal
-        .repartition(col("dt"), col("hr"))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy("dt", "hr")
-        .format(sink.sealFormat)
-        .save(sink.tablePath)
+        else read)
     }
     sink.moveIntoTable(renamed.map(p => p -> staged(p).head.getPath).toMap)
     sink.markSealed(parts)

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * rewrite with dynamic partition overwrite, emptied directories are
   * removed (dynamic overwrite cannot express "now empty"). The offset
   * LOG is a WAL and is deliberately NOT rewritten: erasure there is
-  * completed by retention ([[Retention]] ages segments out), which is
-  * the standard posture — the log is transient transport, the table is
+  * completed when its segments are removed from the log, which happens
+  * outside the library — the log is transient transport, the table is
   * the system of record. Idempotent: a second sweep matches nothing. */
 object Erasure {
 
@@ -35,13 +35,12 @@ object Erasure {
       changeLog: Option[(String, Long)] = None): ErasureReport = {
     // a sink that has never sealed has no table directory — the sweep
     // must still cover staging/quarantine, not throw on the read
-    val tableFs = new Path(sink.tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sealedStats =
-      if (tableFs.exists(new Path(sink.tablePath)))
+      if (sink.fs.exists(new Path(sink.tablePath)))
         TableMaintenance.deleteWhere(spark, sink, predicate, changeLog)
       else TableMaintenance.MaintenanceStats(Seq.empty, 0L, 0L)
-    val staging = sweepDir(spark, sink.stagingPath, Seq("dt", "hr", "ingest_batch"), predicate)
-    val quarantine = sweepDir(spark, sink.quarantinePath, Seq("ingest_batch"), predicate)
+    val staging = sweepDir(spark, sink, sink.stagingPath, Seq("dt", "hr", "ingest_batch"), predicate)
+    val quarantine = sweepDir(spark, sink, sink.quarantinePath, Seq("ingest_batch"), predicate)
     ErasureReport(sealedStats, staging, quarantine)
   }
 
@@ -52,18 +51,18 @@ object Erasure {
     * kept (DELETE semantics, same as the sealed path). */
   private def sweepDir(
       spark: SparkSession,
+      sink: HiveBatchSink,
       path: String,
       partCols: Seq[String],
       predicate: Column): SurfaceReport = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path))) return SurfaceReport(0L, 0, 0)
+    if (!sink.fs.exists(new Path(path))) return SurfaceReport(0L, 0, 0)
     // staging's hour keys as written: partition inference reads `hr=09` as 9
     val raw = spark.read.parquet(path)
     val df = if (partCols.contains("hr")) HiveBatchSink.withDirKeys(raw) else raw
     val hit = coalesce(predicate, lit(false))
     val sep = "\u0001" // never appears in dt/hr/ingest_batch values
     val pkey = concat_ws(sep, partCols.map(c => col(c).cast("string")): _*)
-    TableMaintenance.deletePartitions(fs, path, df, partCols, hit) { m =>
+    TableMaintenance.deletePartitions(sink.fs, path, df, partCols, hit) { m =>
       if (m.kept.nonEmpty)
         df.filter(pkey.isInCollection(m.kept.map(_.mkString(sep))))
           .filter(!hit)

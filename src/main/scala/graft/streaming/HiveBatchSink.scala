@@ -382,6 +382,22 @@ final class HiveBatchSink(
         throw new IOException(s"could not move ${files(p)} into $dir")
     }
 
+  /** Replace whole table hours with `content`, rows keyed by their
+    * zero-padded string dt/hr: one shuffle on (dt, hr), so each hour is
+    * written as one file, then a dynamic overwrite in `sealFormat` that
+    * leaves every other hour as it was. The overwrite clears each hour
+    * it writes, its marker included. The one Spark write into the
+    * table: the seal's rewrite and row-level maintenance both use it. */
+  private[streaming] def overwriteHours(content: DataFrame): Unit =
+    content
+      .repartition(col("dt"), col("hr"))
+      .write
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .partitionBy("dt", "hr")
+      .format(sealFormat)
+      .save(tablePath)
+
   /** Seal every closed partition (idempotent). Returns sealed (dt, hr). */
   def sealClosed(maxEventTime: Timestamp): Seq[(String, String)] = {
     val closed = closedPartitions(maxEventTime)

@@ -15,9 +15,7 @@ import HiveBatchSink.{hours, withDirKeys, withHourKeys}
   * data in the affected hours, not the table: a GDPR erasure hitting one
   * user's three active days rewrites ~72 partitions out of tens of
   * thousands. The discovery scan benefits from partition pruning when the
-  * predicate constrains dt/hr, and composes with the zone-map side table
-  * ([[graft.sources.ZoneMap]]) to skip partitions by value ranges before
-  * any data is read.
+  * predicate constrains dt/hr.
   *
   * Only columnar seal formats: a `text`-sealed table holds serialized
   * lines, and row-level predicates belong on the parsed form.
@@ -167,21 +165,13 @@ object TableMaintenance {
     withDirKeys(sink.readTable())
   }
 
-  /** Dynamic-overwrite `content` into the `affected` partitions and
-    * restore their done markers (the overwrite clears each hour it
-    * writes). Returns the written row count (rides the write as
-    * observe()). */
+  /** Write `content` over the `affected` partitions
+    * ([[HiveBatchSink.overwriteHours]]) and restore their done markers,
+    * which the overwrite clears. Returns the written row count (rides
+    * the write as observe()). */
   private def rewrite(sink: HiveBatchSink, content: DataFrame, affected: Seq[(String, String)]): Long = {
     val obs = org.apache.spark.sql.Observation()
-    content
-      .observe(obs, count(lit(1)).as("written"))
-      .repartition(col("dt"), col("hr"))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy("dt", "hr")
-      .format(sink.sealFormat)
-      .save(sink.tablePath)
+    sink.overwriteHours(content.observe(obs, count(lit(1)).as("written")))
     sink.markSealed(affected)
     obs.get("written").asInstanceOf[Long]
   }

@@ -307,20 +307,6 @@ class AuditGraphSpec extends SparkSpec {
     assert(dim.length == nPurchases, "one dimension row per change event")
   }
 
-  test("storage audit reads column sizes from footers only and finds the dominant column") {
-    import graft.sources.ParquetStats
-    val stats = ParquetStats.columnSizes(spark, s"$sfDir/documents.parquet").collect()
-    val cols = stats.map(_.getString(0)).toSet
-    assert(cols == Set("doc_id", "text", "lang", "source", "n_chars"), s"got $cols")
-    stats.foreach { r =>
-      assert(r.getAs[Long]("compressed_bytes") > 0 && r.getAs[Long]("n_values") > 0)
-    }
-    // text dominates a documents table; footer ordering surfaces it first
-    assert(stats.head.getString(0) == "text", s"dominant column ${stats.head.getString(0)}")
-    val nDocs = t.documents.count()
-    assert(stats.map(_.getAs[Long]("n_values")).max == nDocs)
-  }
-
   test("q110: the NULL group exists, excludes itself from count(col), and survives the null-safe join") {
     import graft.operators.Relational
     val rows = Relational.nullSemantics(t.events).collect()

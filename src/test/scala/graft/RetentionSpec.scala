@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Tables
-import graft.streaming.{HiveBatchSink, Retention, SnapshotStore}
+import graft.streaming.{HiveBatchSink, Retention}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -60,28 +60,5 @@ class RetentionSpec extends SparkSpec {
     // partition-dir inference reads change_id=41 back as int
     assert(captured.selectExpr("cast(change_id as long)").distinct().first().getLong(0) == 41L)
     assert(captured.select("event_id").collect().map(_.getLong(0)).toSet == doomedIds)
-  }
-
-  test("snapshot diff reports inserts and deletes between retained versions, empty on self") {
-    val part = tmp("graft-snapdiff")
-    val v1 = t.events.filter(col("event_id") % 3 =!= 0).select("event_id", "event_type", "value")
-    val s1 = SnapshotStore.writeSnapshot(spark, part, v1)
-    // v2: drop type 'click' rows, add two synthetic rows
-    import spark.implicits._
-    val added = Seq((900001L, "synthetic", 1.5), (900002L, "synthetic", 2.5))
-      .toDF("event_id", "event_type", "value")
-    val v2 = v1.filter(col("event_type") =!= "click").unionByName(added)
-    val s2 = SnapshotStore.writeSnapshot(spark, part, v2)
-
-    val d = SnapshotStore.diff(spark, part, s1, s2).cache()
-    val inserts = d.filter(col("op") === "insert")
-    val deletes = d.filter(col("op") === "delete")
-    assert(inserts.count() == 2)
-    assert(inserts.select("event_type").distinct().first().getString(0) == "synthetic")
-    assert(deletes.count() == v1.filter(col("event_type") === "click").count())
-    assert(deletes.select("event_type").distinct().first().getString(0) == "click")
-    assert(SnapshotStore.diff(spark, part, s1, s1).isEmpty)
-    assert(SnapshotStore.diff(spark, part, s2, s2).isEmpty)
-    d.unpersist()
   }
 }

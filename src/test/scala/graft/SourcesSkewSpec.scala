@@ -23,17 +23,6 @@ class SourcesSkewSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("json source: JSON-lines round-trip to the same typed events") {
-    val dir = tmp()
-    graft.sources.JsonEvents.formatLines(t.events).write.mode("overwrite").text(dir)
-    val back = graft.sources.JsonEvents.read(spark, dir)
-    assert(back.count() == t.events.count())
-    val a = back.agg(round(sum("value"), 4)).first().getDouble(0)
-    val b = t.events.agg(round(sum("value"), 4)).first().getDouble(0)
-    assert(a == b)
-    assert(back.agg(max("ts")).first().getTimestamp(0) == t.events.agg(max("ts")).first().getTimestamp(0))
-  }
-
   test("sealed table scans prune partitions on dt filters") {
     val root   = tmp()
     val sink   = new HiveBatchSink(spark, root)

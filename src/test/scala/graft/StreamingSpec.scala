@@ -295,10 +295,13 @@ class StreamingSpec extends SparkSpec {
     assert(tableRows() == expected)
   }
 
-  test("table maintenance: delete and upsert rewrite only the affected partitions") {
+  // one registration per columnar seal format: both seal and maintenance
+  // write hours through the sink's one overwrite
+  for ((format, suffix) <- Seq("parquet" -> "", "orc" -> " (orc seal)"))
+  test(s"table maintenance: delete and upsert rewrite only the affected partitions$suffix") {
     import graft.streaming.TableMaintenance
     val root = tmp()
-    val sink = new HiveBatchSink(spark, root)
+    val sink = new HiveBatchSink(spark, root, sealFormat = format)
     def toDf(rows: Seq[(Long, String, Long, Double)]) =
       rows.toDF("event_id", "ts_s", "user_id", "value")
         .select(col("event_id"), to_timestamp(col("ts_s")).as("ts"), col("user_id"), col("value"))
@@ -311,6 +314,13 @@ class StreamingSpec extends SparkSpec {
     def untouchedFiles() = fs.listStatus(new org.apache.hadoop.fs.Path(sink.tablePath, "dt=20260101/hr=02"))
       .filter(_.isFile).map(s => (s.getPath.getName, s.getModificationTime, s.getLen)).toSet
     val before = untouchedFiles()
+    // a rewritten hour holds exactly one data file and its marker
+    def assertOneFile(dt: String, hr: String) = {
+      val names = fs.listStatus(new org.apache.hadoop.fs.Path(sink.tablePath, s"dt=$dt/hr=$hr"))
+        .map(_.getPath.getName).filterNot(_.startsWith(".")).toSeq
+      val (markers, data) = names.partition(_ == "_DONE")
+      assert(markers.size == 1 && data.size == 1 && data.head.endsWith(s".$format"), s"$dt/$hr holds $names")
+    }
 
     // GDPR-style erasure of user 7: hr 00 rewritten, hr 01 emptied out
     val del = TableMaintenance.deleteWhere(spark, sink, col("user_id") === 7L)
@@ -320,6 +330,7 @@ class StreamingSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(sink.tablePath, "dt=20260101/hr=01")), "emptied hour survived")
     assert(sink.isSealed("20260101", "00"), "rewritten hour lost its _DONE")
     assert(untouchedFiles() == before, "untouched partition was rewritten")
+    assertOneFile("20260101", "00")
 
     // upsert: revise event 2 in place, insert event 5 into a fresh hour
     val up = TableMaintenance.upsert(spark, sink, toDf(Seq(
@@ -329,6 +340,8 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Map(2L -> 20.0, 4L -> 4.0, 5L -> 50.0))
     assert(sink.isSealed("20260101", "00") && sink.isSealed("20260101", "03"))
     assert(untouchedFiles() == before, "untouched partition was rewritten by upsert")
+    assertOneFile("20260101", "00")
+    assertOneFile("20260101", "03")
 
     // erase-everything path: every affected hour empties out (no rewrite job)
     val wipe = TableMaintenance.deleteWhere(spark, sink, lit(true))
