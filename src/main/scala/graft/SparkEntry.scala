@@ -6918,9 +6918,9 @@ object SparkEntry {
         |  ('q118_peak_concurrency', 'day', 'events.ts'),
         |  ('q118_peak_concurrency', 'n_sessions', ''),
         |  ('q118_peak_concurrency', 'peak_concurrency', 'events.ts'),
-        |  ('q121_dau_wau', 'dau', ''),
+        |  ('q121_dau_wau', 'dau', 'events.ts'),
         |  ('q121_dau_wau', 'day', 'events.ts'),
-        |  ('q121_dau_wau', 'stickiness', ''),
+        |  ('q121_dau_wau', 'stickiness', 'events.ts'),
         |  ('q121_dau_wau', 'wau', ''),
         |  ('q12_case_agg', 'event_type', 'events.event_type'),
         |  ('q12_case_agg', 'high_value_cnt', 'events.value'),

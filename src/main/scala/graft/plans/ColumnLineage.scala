@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Union}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Column-level lineage from ANALYZED plans — which base-table columns
@@ -16,8 +16,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * column)}` map. Scans seed each output attribute with its own
   * (table, name); every `Alias` above maps to the union of its
   * references' lineages (aggregates, arithmetic, CASE, window
-  * functions all reduce to references); pass-through attributes keep
-  * their child entry; Union merges positionally. Filter/join
+  * functions all reduce to references), and so does each output of a
+  * `Generate` (`explode`); pass-through attributes keep their child
+  * entry; Union merges positionally. Filter/join
   * PREDICATE columns are deliberately excluded — this is value
   * lineage, the "which columns shaped the filter" question is a
   * different (coarser) report. */
@@ -49,6 +50,11 @@ object ColumnLineage {
             fromChildren.getOrElse(c.output(i).exprId, Set.empty)
           }.toSet
         }.toMap
+      case g: Generate =>
+        // a generator's outputs carry no Alias: each derives from its references
+        val srcs = g.generator.references.toSeq.flatMap(r =>
+          fromChildren.getOrElse(r.exprId, Set.empty)).toSet
+        fromChildren ++ g.generatorOutput.map(_.exprId -> srcs)
       case _ =>
         // generic node: computed columns via their references,
         // pass-through attributes via the child map

@@ -2,9 +2,10 @@ package graft.sources
 
 import java.io.FileNotFoundException
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** A message-bus-shaped source (topic / partition / offset semantics)
   * backed by plain files — the CHANNEL the reference sink drains,
@@ -15,7 +16,6 @@ import org.apache.spark.sql.functions._
   * Layout:
   * {{{
   *   <root>/partition=P/segment-<start>-<count>.parquet  immutable, offset-contiguous
-  *   <root>/_offsets/<group>.json                        committed per consumer group
   * }}}
   *
   * Bus invariants held:
@@ -26,13 +26,13 @@ import org.apache.spark.sql.functions._
   *   - range reads prune to the overlapping segments BY NAME before any
   *     file is opened, then push the offset predicate into the parquet
   *     scan (offset is a stats-bearing column) — a tail read of a
-  *     100 TB log touches only tail segments;
-  *   - consumer-group offsets commit atomically (temp + rename), and a
-  *     committed range re-read returns the identical rows (replay).
+  *     100 TB log touches only tail segments, and a range re-read
+  *     returns the identical rows (replay).
   *
   * The library writes the log through [[append]] alone, one writer per
-  * log; the streaming surface ([[OffsetLogSourceProvider]]) only reads
-  * it. `segments` is the one parser of the layout above.
+  * log; readers ([[readBatch]] and [[OffsetLogSourceProvider]]) write
+  * nothing into it, so the root holds only `partition=` directories.
+  * `segments` is the one parser of the layout above.
   *
   * Exactly-once end-to-end with the sink is the engine's handshake:
   * [[OffsetLogSourceProvider]] streams the log, the engine writes each
@@ -42,10 +42,10 @@ import org.apache.spark.sql.functions._
   * the engine commits it. A crash between land and commit re-runs the
   * same range under the same id, which overwrites itself. At-least-once
   * delivery + idempotent sink = exactly-once table state, the
-  * reference's transaction model. `drain` is the batch read of a
-  * group's un-consumed range; `committed`/`commit` hold the group
-  * cursor that the source's `commitGroup` mirror and
-  * [[graft.streaming.SinkMonitor]]'s lag probe read. */
+  * reference's transaction model. The engine's checkpoint is the only
+  * cursor: the log keeps no consumer state, and the stream reports its
+  * lag behind the head as a progress metric (`lagRows`, read by
+  * [[graft.streaming.SinkMonitor]]). */
 object OffsetLog {
 
   private val PartitionKey = "partition="
@@ -84,12 +84,10 @@ object OffsetLog {
     if (parts.isEmpty) None else Some(parts.max + 1)
   }
 
-  private def head(segs: Seq[Segment]): Long = segs.map(_.end).foldLeft(0L)(math.max)
-
   /** Per-partition next-offset (head) — parsed from segment NAMES only. */
   def endOffsets(spark: SparkSession, root: String, numPartitions: Int): Map[Int, Long] = {
     val f = fs(spark, root)
-    (0 until numPartitions).map(p => p -> head(segments(f, root, p))).toMap
+    (0 until numPartitions).map(p => p -> segments(f, root, p).map(_.end).foldLeft(0L)(math.max)).toMap
   }
 
   /** Append a batch. Rows are routed to partitions by key hash (same
@@ -164,21 +162,19 @@ object OffsetLog {
     * producer append) is a caught-up read, not an error: returns an
     * empty frame with `schema` if the caller supplied one, else with
     * the two columns the log itself guarantees (partition, offset) —
-    * either way `count() == 0` and the drain loop sees caught-up. */
+    * either way `count() == 0` and the reader sees caught-up. */
   def readBatch(
       spark: SparkSession,
       root: String,
       numPartitions: Int,
       from: Map[Int, Long],
       until: Map[Int, Long],
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+      schema: Option[StructType] = None): DataFrame = {
     val f = fs(spark, root)
     val listed = (0 until numPartitions).map(p => p -> segments(f, root, p))
     if (listed.forall(_._2.isEmpty)) {
-      val s = schema.getOrElse(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("partition", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("offset", org.apache.spark.sql.types.LongType))))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+      val s = schema.getOrElse(StructType(Seq(StructField("partition", IntegerType), StructField("offset", LongType))))
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
     }
     val paths = listed.flatMap { case (p, segs) =>
       val lo = from.getOrElse(p, 0L)
@@ -189,7 +185,7 @@ object OffsetLog {
       // caught up: empty frame with the log's schema (one footer read)
       val schema = spark.read.option("basePath", root)
         .parquet(listed.flatMap(_._2).head.path.toString).schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
       val fromExpr = from.foldLeft(lit(0L)) { case (acc, (p, o)) =>
         when(col("partition") === p, o).otherwise(acc)
@@ -199,101 +195,6 @@ object OffsetLog {
       }
       spark.read.option("basePath", root).parquet(paths.map(_.toString): _*)
         .filter(col("offset") >= fromExpr && col("offset") < untilExpr)
-    }
-  }
-
-  /** Committed offsets of a consumer group (empty map if none). */
-  def committed(spark: SparkSession, root: String, group: String): Map[Int, Long] = {
-    val f = fs(spark, root)
-    val p = new Path(s"$root/_offsets/$group.json")
-    if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      val txt =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      // one line per partition: "<p>:<offset>" — no JSON lib needed
-      txt.linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(a, b) = l.split(":"); a.toInt -> b.toLong
-      }.toMap
-    }
-  }
-
-  /** Atomically commit a consumer group's offsets (temp + rename). */
-  def commit(spark: SparkSession, root: String, group: String, offsets: Map[Int, Long]): Unit = {
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_offsets"))
-    val tmp = new Path(s"$root/_offsets/$group.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(offsets.toSeq.sorted.map { case (p, o) => s"$p:$o" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(root).toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(s"$root/_offsets/$group.json"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** The batch read of a group: everything the group hasn't committed,
-    * plus the end offsets to commit once the rows are consumed (a
-    * stream uses the engine's handshake instead, see the object doc).
-    * Safe to call before the first producer append — returns an empty
-    * caught-up batch (with `schema` if supplied), never throws on a
-    * segment-less log. */
-  def drain(
-      spark: SparkSession,
-      root: String,
-      group: String,
-      numPartitions: Int,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): (DataFrame, Map[Int, Long]) = {
-    val from = committed(spark, root, group)
-    val until = endOffsets(spark, root, numPartitions)
-    (readBatch(spark, root, numPartitions, from, until, schema), until)
-  }
-
-  /** CONSUMER-LAG report — the `--describe` every bus operator runs
-    * before paging anyone: per (group, partition), the committed
-    * cursor, the head, the row lag, and whether the committed cursor
-    * has fallen BEHIND the retained tail (the q-retention seam the
-    * DSv2 source fails loudly on — here it is the ops readout that
-    * catches it BEFORE a restart trips it). Metadata-only: heads and
-    * tails parse from segment NAMES, cursors from the group files —
-    * no data file opens at any log size, exactly like a broker's
-    * describe. A group with no committed file reads cursor 0 (the
-    * initial position). */
-  def lagReport(
-      spark: SparkSession,
-      root: String,
-      numPartitions: Int,
-      groups: Seq[String]): DataFrame = {
-    import spark.implicits._
-    lagRows(spark, root, numPartitions, groups)
-      .toDF("group", "partition", "committed", "head", "lag_rows", "behind_retention")
-      .orderBy("group", "partition")
-  }
-
-  /** Driver-side rows of [[lagReport]] — the form a
-    * [[graft.streaming.SinkMonitor]] lag probe can afford on the
-    * listener event loop (pure name/cursor-file metadata, no Spark
-    * job). Tuple: (group, partition, committed, head, lag_rows,
-    * behind_retention). */
-  def lagRows(
-      spark: SparkSession,
-      root: String,
-      numPartitions: Int,
-      groups: Seq[String]): Seq[(String, Int, Long, Long, Long, Boolean)] = {
-    // per partition: the retained tail (lowest segment start) and the
-    // head, 0 for a partition with no segment
-    val f = fs(spark, root)
-    val bounds = (0 until numPartitions).map { p =>
-      val segs = segments(f, root, p)
-      (if (segs.isEmpty) 0L else segs.map(_.start).min, head(segs))
-    }
-    groups.flatMap { g =>
-      val cur = committed(spark, root, g)
-      bounds.zipWithIndex.map { case ((t, h), p) =>
-        val c = cur.getOrElse(p, 0L)
-        (g, p, c, h, math.max(0L, h - c), c < t)
-      }
     }
   }
 }

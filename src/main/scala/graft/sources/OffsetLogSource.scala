@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import java.util.Optional
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
@@ -10,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,10 +20,10 @@ import org.apache.spark.util.SerializableConfiguration
 /** [[OffsetLog]] as a genuine Data Source V2 `MicroBatchStream` — the
   * standard `readStream.format(...)` surface over the immutable segment
   * layout, so Structured Streaming OWNS offset tracking and
-  * checkpointing: the engine's offset WAL, not a consumer-group file, is
-  * the cursor. [[graft.streaming.HiveBatchSink.streamWriter]] over this
-  * source (or over a `unionByName` of several, committed together) is
-  * the bus → sealed-hour path. The provider is read-only: rows enter the
+  * checkpointing: the engine's offset WAL is the only cursor, and the
+  * log holds no consumer state. [[graft.streaming.HiveBatchSink.streamWriter]]
+  * over this source (or over a `unionByName` of several, committed
+  * together) is the bus → sealed-hour path. The provider is read-only: rows enter the
   * log through [[OffsetLog.append]].
   *
   * {{{
@@ -32,7 +33,6 @@ import org.apache.spark.util.SerializableConfiguration
   *     .option("numPartitions", "4")
   *     .option("maxRowsPerTrigger", "100000")   // admission control
   *     .option("failOnDataLoss", "true")        // retention-hole posture
-  *     .option("commitGroup", "ops")            // mirror cursor for lagReport
   *     .load()
   * }}}
   *
@@ -51,7 +51,9 @@ import org.apache.spark.util.SerializableConfiguration
   *   - offsets checkpoint through the engine: a restart resumes from
   *     the streaming WAL — `commit` is a no-op because segments are
   *     immutable (nothing to release), which is also why replay is
-  *     exact.
+  *     exact;
+  *   - each progress event's source `metrics` carry `lagRows`, the rows
+  *     between the batch's end and the head that trigger listed.
   *
   * Segment payloads are read with parquet-hadoop's example Group API
   * (flat primitive schemas: long/int/double/float/boolean/string/
@@ -82,12 +84,15 @@ class OffsetLogSourceProvider extends TableProvider {
 
 private[sources] object OffsetLogSource {
   /** Partition count: the explicit option wins; otherwise DISCOVER it
-    * from the `partition=P` directory layout (max P + 1). An
-    * understated explicit value would silently truncate the partition
-    * set — discovery can't make that mistake, and a log that doesn't
-    * exist yet falls back to 4 (matching [[OffsetLog]] callers). */
+    * from the `partition=P` directory layout (max P + 1). A log with no
+    * partition directory yet shows no count, and a guessed one would
+    * leave a later producer's higher partitions unread: attaching there
+    * needs the option. */
   private[sources] def resolvePartitions(explicit: Option[String], root: String): Int =
-    explicit.map(_.toInt).getOrElse(OffsetLog.discoverPartitions(SparkSession.active, root).getOrElse(4))
+    explicit.map(_.toInt).getOrElse(
+      OffsetLog.discoverPartitions(SparkSession.active, root).getOrElse(throw new IllegalArgumentException(
+        s"offsetlog at $root has no partition=P directory yet: set option 'numPartitions' " +
+          "to the producer's partition count to attach before the first append")))
 
   /** Spark schema of the log: one segment footer (via Spark's own
     * parquet conversion) + the directory-derived partition column. An
@@ -115,14 +120,13 @@ private[sources] class OffsetLogTable(tableSchema: StructType, root: String, num
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val maxRows = Option(options.get("maxRowsPerTrigger")).map(_.toLong)
     val failOnLoss = Option(options.get("failOnDataLoss")).forall(_.toBoolean)
-    val commitGroup = Option(options.get("commitGroup")).filter(_.nonEmpty)
     maxRows.foreach(n => require(n > 0, s"maxRowsPerTrigger must be positive, got $n"))
     new ScanBuilder {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = tableSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new OffsetLogMicroBatchStream(
-            tableSchema, root, numPartitions, maxRows, failOnLoss, commitGroup)
+            tableSchema, root, numPartitions, maxRows, failOnLoss)
       }
     }
   }
@@ -158,9 +162,8 @@ private[sources] class OffsetLogMicroBatchStream(
     root: String,
     numPartitions: Int,
     maxRowsPerTrigger: Option[Long] = None,
-    failOnDataLoss: Boolean = true,
-    commitGroup: Option[String] = None)
-  extends MicroBatchStream with SupportsTriggerAvailableNow {
+    failOnDataLoss: Boolean = true)
+  extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
   private def spark = SparkSession.active
 
   /** Captured head at AvailableNow start: the run drains TO here in
@@ -189,13 +192,30 @@ private[sources] class OffsetLogMicroBatchStream(
   override def getDefaultReadLimit: ReadLimit =
     maxRowsPerTrigger.fold(ReadLimit.allAvailable())(ReadLimit.maxRows)
 
+  /** The head the latest trigger's [[latestOffset]] listed, reported
+    * and measured against without listing the log again. */
+  @volatile private var lastHead: Option[Map[Int, Long]] = None
+
   override def reportLatestOffset(): Offset =
-    LogOffsets(OffsetLog.endOffsets(spark, root, numPartitions))
+    LogOffsets(lastHead.getOrElse(OffsetLog.endOffsets(spark, root, numPartitions)))
+
+  /** `lagRows`: rows between the batch's end and the head, summed over
+    * partitions — the progress event's "how far behind the bus". The
+    * offset goes through its JSON form, so one restored from the
+    * checkpoint reads the same as one this stream built. */
+  override def metrics(latestConsumedOffset: Optional[Offset]): util.Map[String, String] =
+    lastHead match {
+      case Some(head) if latestConsumedOffset.isPresent =>
+        val consumed = LogOffsets.parse(latestConsumedOffset.get.json()).ends
+        val lag = head.map { case (p, e) => math.max(0L, e - consumed.getOrElse(p, 0L)) }.sum
+        util.Map.of("lagRows", lag.toString)
+      case _ => util.Map.of()
+    }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[LogOffsets].ends
-    mirrorCursor(from) // `start` is WAL-durable AND processed: safe to expose
     val head = OffsetLog.endOffsets(spark, root, numPartitions)
+    lastHead = Some(head)
     // AvailableNow: never admit past the head captured at run start
     val end = availableNowCap match {
       case Some(cap) => head.map { case (p, e) => p -> math.min(e, cap.getOrElse(p, 0L)) }
@@ -238,36 +258,9 @@ private[sources] class OffsetLogMicroBatchStream(
 
   /** Segments are immutable, and removing old ones is done outside the
     * library, not by a consumer: nothing to release on commit; the
-    * engine's WAL is the durable cursor.
-    *
-    * With `commitGroup` set, the committed range is ALSO mirrored into
-    * the log's consumer-group cursor file — purely observational (a
-    * restart still resumes from the WAL, never this file), but it puts
-    * an engine-owned stream on the [[OffsetLog.lagReport]] ops
-    * surface: lag / behind_retention become visible to a
-    * monitor without touching the checkpoint. The engine invokes this
-    * while cleaning up batch N before constructing N+1, so the mirror
-    * TRAILS the true committed position by at most one batch (and a
-    * terminated run leaves its final batch unmirrored until the next
-    * attach) — async group commit, the same staleness a broker's
-    * `--describe` shows. Best-effort: a cursor mirror failure must
-    * never fail the batch it observes. */
-  override def commit(end: Offset): Unit =
-    mirrorCursor(end.asInstanceOf[LogOffsets].ends)
+    * engine's WAL is the durable cursor. */
+  override def commit(end: Offset): Unit = ()
 
-  /** Last cursor mirrored, to skip redundant file writes on idle
-    * ProcessingTime ticks (latestOffset fires per trigger). */
-  @volatile private var mirrored: Option[Map[Int, Long]] = None
-
-  private def mirrorCursor(ends: Map[Int, Long]): Unit =
-    commitGroup.foreach { g =>
-      if (!mirrored.contains(ends)) {
-        try {
-          OffsetLog.commit(spark, root, g, ends)
-          mirrored = Some(ends)
-        } catch { case _: Throwable => () }
-      }
-    }
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

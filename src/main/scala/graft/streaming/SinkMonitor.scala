@@ -6,94 +6,52 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 /** Streaming sink monitoring — the Spark-native form of the reference's
   * per-sink counter reporting (events received/drained, batch rates).
   * Attaches a [[StreamingQueryListener]] and keeps one record per
-  * completed micro-batch: batch id, input rows, processing rate and
-  * duration. The listener runs on the driver's event loop — capture is
-  * O(1) per batch and never touches the data path, so monitoring cost
-  * is independent of data scale. Accumulator counters
-  * ([[HiveBatchSink.received]] etc.) stay the source of truth for
-  * totals; this is the progress/rate surface an operator dashboard
-  * polls. */
+  * completed micro-batch: batch id, input rows, processing rate,
+  * duration and the sources' lag behind the bus. The listener runs on
+  * the driver's event loop — capture is O(1) per batch and never touches
+  * the data path or the file system, so monitoring cost is independent
+  * of data scale. Accumulator counters ([[HiveBatchSink.received]] etc.)
+  * stay the source of truth for totals; this is the progress/rate
+  * surface an operator dashboard polls. */
 final class SinkMonitor extends StreamingQueryListener {
 
+  /** `queryName` falls back to the run id: batch ids collide across
+    * queries, so per-batch analyses group by (queryName, batchId).
+    * `lagRows` sums the `lagRows` metric over the query's sources (an
+    * offset log reports the rows between the batch's end and the head);
+    * None when no source reports it. */
   final case class BatchProgress(
       queryName: String,
       batchId: Long,
       numInputRows: Long,
       processedRowsPerSecond: Double,
-      durationMs: Long)
-
-  /** One consumer-lag observation, taken at a micro-batch boundary:
-    * [[graft.sources.OffsetLog.lagRows]] for one (group, partition)
-    * stamped with the QUERY (name, falling back to run id) and batch
-    * that had just completed. The query stamp disambiguates a session
-    * running several streams (or one monitor reused across drains):
-    * batch ids collide across queries, so per-batch analyses must group
-    * by (queryName, batchId) — round-10 advice. */
-  final case class LagSample(
-      queryName: String,
-      batchId: Long,
-      group: String,
-      partition: Int,
-      committed: Long,
-      head: Long,
-      lagRows: Long,
-      behindRetention: Boolean)
+      durationMs: Long,
+      lagRows: Option[Long])
 
   private val buf = scala.collection.mutable.ArrayBuffer.empty[BatchProgress]
-  private val lagBuf = scala.collection.mutable.ArrayBuffer.empty[LagSample]
-  @volatile private var probe: Option[(String, Int, Seq[String])] = None
-  @volatile private var session: Option[SparkSession] = None
 
   override def onQueryStarted(event: StreamingQueryListener.QueryStartedEvent): Unit = ()
   override def onQueryTerminated(event: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
 
   override def onQueryProgress(event: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = event.progress
+    val lags = p.sources.toSeq.flatMap(s => Option(s.metrics.get("lagRows")).map(_.toLong))
     buf.synchronized {
       buf += BatchProgress(
         Option(p.name).getOrElse(p.id.toString),
         p.batchId,
         p.numInputRows,
         p.processedRowsPerSecond,
-        p.batchDuration)
+        p.batchDuration,
+        if (lags.isEmpty) None else Some(lags.sum))
     }
-    sampleLag(Option(p.name).getOrElse(p.id.toString), p.batchId)
-  }
-
-  /** Take one lag observation NOW (also called per completed batch when
-    * a probe is configured). Metadata-only — segment names + cursor
-    * files, no Spark job — so it is safe on the listener event loop and
-    * its cost is independent of log size. Best-effort: a probe failure
-    * must never kill the listener bus. */
-  def sampleLag(queryName: String, batchId: Long): Unit =
-    for ((root, np, groups) <- probe; s <- session)
-      try {
-        val rows = graft.sources.OffsetLog.lagRows(s, root, np, groups)
-        lagBuf.synchronized {
-          rows.foreach { case (g, p, c, h, l, b) =>
-            lagBuf += LagSample(queryName, batchId, g, p, c, h, l, b)
-          }
-        }
-      } catch { case _: Throwable => () }
-
-  /** Observe an [[graft.sources.OffsetLog]]'s consumer lag at every
-    * micro-batch boundary — pair with the DSv2 source's `commitGroup`
-    * option (which mirrors the engine's committed range into the
-    * group cursor) to watch an engine-owned stream drain a backlog. */
-  def withLagProbe(root: String, numPartitions: Int, groups: Seq[String]): this.type = {
-    probe = Some((root, numPartitions, groups)); this
   }
 
   /** Completed-batch records captured so far (driver-side snapshot). */
   def progress: Seq[BatchProgress] = buf.synchronized(buf.toVector)
 
-  /** Lag observations captured so far (one per group×partition×batch). */
-  def lagSamples: Seq[LagSample] = lagBuf.synchronized(lagBuf.toVector)
-
   def totalInputRows: Long = progress.map(_.numInputRows).sum
 
-  def attach(spark: SparkSession): this.type = {
-    session = Some(spark); spark.streams.addListener(this); this
-  }
+  def attach(spark: SparkSession): this.type = { spark.streams.addListener(this); this }
   def detach(spark: SparkSession): Unit = spark.streams.removeListener(this)
 }

@@ -5,8 +5,8 @@ import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** q227: column-level lineage over analyzed plans — value lineage only
-  * (predicates deliberately excluded), aliases reduce to their
-  * references, unions merge positionally. */
+  * (predicates deliberately excluded), aliases and generators reduce to
+  * their references, unions merge positionally. */
 class ColumnLineageSpec extends SparkSpec {
 
   private lazy val t = Tables(spark, sfDir)
@@ -37,6 +37,13 @@ class ColumnLineageSpec extends SparkSpec {
     val b = t.lineitem.select(col("l_extendedprice").as("v"))
     val m = ColumnLineage.of(a.unionByName(b)).toMap
     assert(m("v") === Set("orders" -> "o_totalprice", "lineitem" -> "l_extendedprice"))
+  }
+
+  test("q227: a generator's output traces to the generator's references") {
+    val df = t.events
+      .select(explode(sequence(to_date(col("ts")), date_add(to_date(col("ts")), 6))).as("wday"))
+      .select(date_format(col("wday"), "yyyy-MM-dd").as("day"))
+    assert(ColumnLineage.of(df).toMap.apply("day") === Set("events" -> "ts"))
   }
 
   test("q227: count(*) columns honestly report no value sources") {

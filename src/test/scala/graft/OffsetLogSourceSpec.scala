@@ -186,6 +186,13 @@ class OffsetLogSourceSpec extends SparkSpec {
     assert(rows == 60, s"discovery must cover all $P partitions, read $rows rows")
   }
 
+  test("an empty log without numPartitions is refused at load(), naming the option") {
+    val logRoot = Files.createTempDirectory("graft-dsv2-nopart").toString
+    val e = intercept[IllegalArgumentException](
+      spark.readStream.format(fmt).option("path", logRoot).load())
+    assert(e.getMessage.contains("numPartitions"), e.getMessage)
+  }
+
   test("admission control: a backlog drains in >=3 bounded micro-batches and lands exactly the log's rows") {
     val logRoot = Files.createTempDirectory("graft-dsv2-ac1").toString
     val events = Tables(spark, sfDir).events
@@ -395,5 +402,14 @@ class OffsetLogSourceSpec extends SparkSpec {
     started.foreach(_.awaitTermination(120000))
     assert(started.isFailure, "writeStream into an offset log must be refused at start()")
     assert(OffsetLog.endOffsets(spark, target, P).values.sum == 0, "no segment may land in the target log")
+    // a consumer that reads the log writes nothing into it either
+    readLog(source).writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-dsv2-ro-ck2").toString)
+      .foreachBatch { (_: DataFrame, _: Long) => () }
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination(120000)
+    val entries = new java.io.File(source).list().toSeq
+    assert(entries.nonEmpty && entries.forall(_.startsWith("partition=")),
+      s"the log root must hold only partition= directories after a read: $entries")
   }
 }

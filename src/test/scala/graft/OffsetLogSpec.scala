@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Bus-shape source contract: per-partition contiguous offsets,
-  * metadata-only head, name-pruned range reads, committed consumer
-  * groups, replayable ranges. */
+  * metadata-only head, name-pruned range reads, replayable ranges. The
+  * log keeps no consumer cursor: a reader names its range. */
 class OffsetLogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -40,45 +40,42 @@ class OffsetLogSpec extends SparkSpec {
 
   test("a consumer started before the first producer append sees an empty caught-up batch, not a crash") {
     val root = tmp()
-    // no segments at all: drain must return an empty frame (schema from
-    // the caller when supplied), never throw
-    val (d0, ends0) = OffsetLog.drain(spark, root, "early", P)
-    assert(d0.count() == 0 && ends0.values.forall(_ == 0L))
+    // no segments at all: the full range reads as an empty frame (schema
+    // from the caller when supplied), never a throw
+    val ends0 = OffsetLog.endOffsets(spark, root, P)
+    assert(ends0.values.forall(_ == 0L))
+    val d0 = OffsetLog.readBatch(spark, root, P, Map.empty, Map.empty)
+    assert(d0.count() == 0 && d0.columns.toSeq == Seq("partition", "offset"))
     val s = batch(0 until 1).schema
-    val (d1, _) = OffsetLog.drain(spark, root, "early", P, Some(s))
+    val d1 = OffsetLog.readBatch(spark, root, P, Map.empty, Map.empty, Some(s))
     assert(d1.count() == 0 && d1.schema == s)
-    // the producer shows up later; the same group then drains normally
+    // the producer shows up later; the same reader then sees its rows,
+    // and a read from the new head is caught up
     OffsetLog.append(spark, root, batch(0 until 10), "k", P)
-    val (d2, ends2) = OffsetLog.drain(spark, root, "early", P)
-    assert(d2.count() == 10)
-    OffsetLog.commit(spark, root, "early", ends2)
-    assert(OffsetLog.drain(spark, root, "early", P)._1.count() == 0)
+    val ends1 = OffsetLog.endOffsets(spark, root, P)
+    assert(OffsetLog.readBatch(spark, root, P, ends0, ends1).count() == 10)
+    assert(OffsetLog.readBatch(spark, root, P, ends1, Map.empty).count() == 0)
   }
 
-  test("drain → commit → drain consumes each record exactly once; uncommitted ranges replay") {
+  test("range re-reads replay identically; the next range holds only the new rows") {
     val root = tmp()
     OffsetLog.append(spark, root, batch(0 until 40), "k", P)
-    val (d1, ends1) = OffsetLog.drain(spark, root, "g1", P)
+    val ends1 = OffsetLog.endOffsets(spark, root, P)
+    val d1 = OffsetLog.readBatch(spark, root, P, Map.empty, ends1)
     assert(d1.count() == 40)
-    // crash before commit: the same range replays identically
-    val (d1again, _) = OffsetLog.drain(spark, root, "g1", P)
+    // a crash before the reader's cursor moves: the same range replays identically
+    val d1again = OffsetLog.readBatch(spark, root, P, Map.empty, ends1)
     assert(d1again.orderBy("partition", "offset").collect().toSeq ==
       d1.orderBy("partition", "offset").collect().toSeq)
-    OffsetLog.commit(spark, root, "g1", ends1)
-    assert(OffsetLog.committed(spark, root, "g1") == ends1)
     // caught up: empty frame, schema intact
-    val (empty, _) = OffsetLog.drain(spark, root, "g1", P)
+    val empty = OffsetLog.readBatch(spark, root, P, ends1, Map.empty)
     assert(empty.count() == 0)
     assert(empty.columns.contains("offset") && empty.columns.contains("partition"))
     // new appends: only the new records arrive
     OffsetLog.append(spark, root, batch(40 until 55), "k", P)
-    val (d2, ends2) = OffsetLog.drain(spark, root, "g1", P)
+    val d2 = OffsetLog.readBatch(spark, root, P, ends1, OffsetLog.endOffsets(spark, root, P))
     assert(d2.count() == 15)
     assert(d2.agg(min("n")).head().getLong(0) == 40L)
-    OffsetLog.commit(spark, root, "g1", ends2)
-    // a second group is independent and sees the whole log
-    val (dAll, _) = OffsetLog.drain(spark, root, "g2", P)
-    assert(dAll.count() == 55)
   }
 
   test("range reads prune segments by name before opening files") {
@@ -101,45 +98,5 @@ class OffsetLogSpec extends SparkSpec {
     val mid1 = OffsetLog.readBatch(spark, root, P, e1, e2).orderBy("partition", "offset").collect()
     val mid2 = OffsetLog.readBatch(spark, root, P, e1, e2).orderBy("partition", "offset").collect()
     assert(mid1.toSeq == mid2.toSeq && mid1.length == 60)
-  }
-
-  test("lag report: caught-up group reads lag 0, a lagging group reads exactly the undrained rows, retention breach flags") {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-lag").toString
-    val P = 4
-    val events = graft.sources.Tables(spark, sfDir).events
-    OffsetLog.append(spark, root, events.limit(100), "user_id", P)
-    // group "fast" drains and commits; group "slow" never commits
-    val (batch, ends) = OffsetLog.drain(spark, root, "fast", P)
-    assert(batch.count() == 100)
-    OffsetLog.commit(spark, root, "fast", ends)
-    OffsetLog.append(spark, root,
-      events.exceptAll(events.limit(100)).limit(40), "user_id", P)
-    val rep = OffsetLog.lagReport(spark, root, P, Seq("fast", "slow"))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
-    val fastLag = (0 until P).map(p => rep(("fast", p)).getAs[Long]("lag_rows")).sum
-    val slowLag = (0 until P).map(p => rep(("slow", p)).getAs[Long]("lag_rows")).sum
-    assert(fastLag == 40, s"fast group owes exactly the new tranche: $fastLag")
-    assert(slowLag == 140, s"uncommitted group owes everything: $slowLag")
-    assert(rep.values.forall(!_.getAs[Boolean]("behind_retention")))
-    // expire the oldest segment of one partition: the slow group's
-    // cursor (0) is now behind the retained tail — flagged, not silent
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val SegRe = "segment-(\\d+)-(\\d+)\\.parquet".r
-    val victim = (0 until P).flatMap { p =>
-      val d = new org.apache.hadoop.fs.Path(s"$root/partition=$p")
-      f.listStatus(d).toSeq.collect {
-        case st if SegRe.findFirstIn(st.getPath.getName).isDefined &&
-          st.getPath.getName.startsWith("segment-0-") => (p, st.getPath)
-      }
-    }.head
-    f.delete(victim._2, false)
-    val rep2 = OffsetLog.lagReport(spark, root, P, Seq("fast", "slow"))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
-    assert(rep2(("slow", victim._1)).getAs[Boolean]("behind_retention"),
-      "a cursor behind the retained tail must flag")
-    assert(!rep2(("fast", victim._1)).getAs[Boolean]("behind_retention"),
-      "the caught-up group is unaffected by tail expiry")
   }
 }

@@ -3,99 +3,91 @@ package graft
 import graft.sources.{OffsetLog, OffsetLogSourceProvider, Tables}
 import graft.streaming.SinkMonitor
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
-/** offset_log_lag_report, wired OPERATIONALLY (round-9 verdict #8): a
-  * running engine-owned stream exposes consumer lag / behind_retention
-  * through [[SinkMonitor]] while it drains a backlog — the DSv2
-  * source's `commitGroup` option mirrors the engine's committed range
-  * into the log's group cursor, and the monitor samples
-  * [[OffsetLog.lagRows]] at every micro-batch boundary. */
+/** offset_log_lag_report: a running engine-owned stream reports how far
+  * it is behind the bus through [[SinkMonitor]] — the offset-log source
+  * puts `lagRows` (head − batch end, summed over partitions) in every
+  * progress event, and the monitor sums it over the query's sources. */
 class SinkMonitorLagSpec extends SparkSpec {
   private val P = 4
   private val fmt = classOf[OffsetLogSourceProvider].getName
+
+  private def capped(root: String, cap: Long): DataFrame =
+    spark.readStream.format(fmt)
+      .option("path", root)
+      .option("numPartitions", P.toString)
+      .option("maxRowsPerTrigger", cap.toString)
+      .load()
+
+  /** Drains `stream` with AvailableNow and returns the monitor's records
+    * of the query's data batches, in batch order. Listener events arrive
+    * asynchronously, so it waits until the monitor holds every batch the
+    * query reported. */
+  private def drainMonitored(name: String, stream: DataFrame): Seq[SinkMonitor#BatchProgress] = {
+    val mon = new SinkMonitor().attach(spark)
+    try {
+      val q = stream.writeStream
+        .queryName(name)
+        .option("checkpointLocation", Files.createTempDirectory(s"graft-$name-ck").toString)
+        .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(180000)
+      val reported = q.recentProgress.length
+      var waited = 0
+      while (mon.progress.count(_.queryName == name) < reported && waited < 100) {
+        Thread.sleep(100); waited += 1
+      }
+      mon.progress.filter(b => b.queryName == name && b.numInputRows > 0).sortBy(_.batchId)
+    } finally mon.detach(spark)
+  }
+
+  /** Every batch's lag is exactly the rows not yet consumed: the head
+    * (`total`, nothing appended during the drain) minus the rows of this
+    * batch and every earlier one. */
+  private def assertExactLag(batches: Seq[SinkMonitor#BatchProgress], total: Long): Unit = {
+    val consumed = batches.scanLeft(0L)(_ + _.numInputRows).tail
+    assert(consumed.last == total, s"the drain must read every appended row: ${consumed.last} != $total")
+    batches.zip(consumed).foreach { case (b, c) =>
+      assert(b.lagRows.contains(total - c), s"batch ${b.batchId}: lag ${b.lagRows}, expected ${total - c}")
+    }
+  }
 
   test("a backlogged admission-controlled stream exposes shrinking lag through the monitor") {
     val logRoot = Files.createTempDirectory("graft-lagmon-log").toString
     val events = Tables(spark, sfDir).events
     val n = events.count()
     OffsetLog.append(spark, logRoot, events, "user_id", P)
+    val cap = math.max(1L, n / 5)
 
-    val mon = new SinkMonitor()
-      .withLagProbe(logRoot, P, Seq("ops"))
-      .attach(spark)
-    try {
-      val ck = Files.createTempDirectory("graft-lagmon-ck").toString
-      val cap = math.max(1L, n / 5)
-      def drain() = {
-        val q = spark.readStream.format(fmt)
-          .option("path", logRoot)
-          .option("numPartitions", P.toString)
-          .option("maxRowsPerTrigger", cap.toString)
-          .option("commitGroup", "ops")
-          .load()
-          .writeStream
-          .option("checkpointLocation", ck)
-          .foreachBatch { (_: DataFrame, _: Long) => () }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(180000)
-      }
-      drain()
-      mon.sampleLag("manual", batchId = -1L) // post-drain observation
-
-      val samples = mon.lagSamples
-      assert(samples.nonEmpty, "the probe must capture at least one batch boundary")
-      assert(samples.forall(_.group == "ops"))
-      // round-11: every engine-captured sample carries its query identity
-      assert(samples.filter(_.batchId >= 0).forall(_.queryName.nonEmpty))
-      assert(samples.forall(!_.behindRetention),
-        "no retention ran — nothing can be behind the retained tail")
-      // mid-drain: some observation must catch the backlog NOT yet drained
-      // (5+ bounded batches; the cursor mirror trails by at most one batch)
-      val totalLagByBatch = samples.groupBy(_.batchId).map { case (b, ss) => b -> ss.map(_.lagRows).sum }
-      assert(totalLagByBatch.values.exists(_ > 0),
-        s"a 5-batch capped drain must be observed mid-backlog: $totalLagByBatch")
-      // the mirror TRAILS by at most one committed batch (the engine
-      // calls source.commit for batch N while cleaning up before batch
-      // N+1, so a terminated AvailableNow run leaves the final batch
-      // unmirrored — bus group commits are async in exactly this way)
-      val fin = samples.filter(_.batchId == -1L)
-      assert(fin.nonEmpty && fin.map(_.lagRows).sum <= cap,
-        s"post-drain mirror may trail by at most one batch: $fin")
-      assert(fin.map(_.head).sum == n, "heads must account for every appended row")
-      // lag is monotone non-increasing batch over batch (drain makes progress)
-      val ordered = totalLagByBatch.toSeq.sortBy { case (b, _) => if (b < 0) Long.MaxValue else b }
-      ordered.sliding(2).foreach {
-        case Seq((_, a), (_, b)) => assert(b <= a, s"lag must shrink monotonically: $ordered")
-        case _ => ()
-      }
-      // ... and the next attach HEALS the trail: re-running the (now
-      // caught-up) stream commits the restored final batch, bringing
-      // the mirrored cursor to the head — lag reads 0 end-to-end
-      drain()
-      mon.sampleLag("manual", batchId = -2L)
-      val healed = mon.lagSamples.filter(_.batchId == -2L)
-      assert(healed.nonEmpty && healed.forall(_.lagRows == 0L),
-        s"a reattach must heal the one-batch trail: $healed")
-    } finally mon.detach(spark)
+    val batches = drainMonitored("lag_one_log", capped(logRoot, cap))
+    assert(batches.length >= 3, s"a $n-row backlog at cap=$cap must drain in several batches: $batches")
+    val lags = batches.map(_.lagRows.getOrElse(-1L))
+    assert(lags.exists(_ > 0), s"a capped drain must be observed mid-backlog: $lags")
+    assert(lags.sliding(2).forall { case Seq(a, b) => b <= a; case _ => true },
+      s"lag must never rise from batch to batch: $lags")
+    assert(lags.last == 0L, s"the final batch of the drain must report lag 0: $lags")
+    assertExactLag(batches, n)
   }
 
-  test("without commitGroup the cursor file is never written (observational mirror is opt-in)") {
-    val logRoot = Files.createTempDirectory("graft-lagmon-log2").toString
+  test("a union of two logs reports the sum of both logs' lag") {
     val events = Tables(spark, sfDir).events
-    OffsetLog.append(spark, logRoot, events.limit(50), "user_id", P)
-    val q = spark.readStream.format(fmt)
-      .option("path", logRoot).option("numPartitions", P.toString)
-      .load()
-      .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft-lagmon-ck2").toString)
-      .foreachBatch { (_: DataFrame, _: Long) => () }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    assert(OffsetLog.committed(spark, logRoot, "ops").isEmpty,
-      "no commitGroup option => no cursor mirror")
+    val (a, b) = (Files.createTempDirectory("graft-lagmon-a").toString,
+      Files.createTempDirectory("graft-lagmon-b").toString)
+    OffsetLog.append(spark, a, events.filter(col("event_id") % 2 === 0), "user_id", P)
+    OffsetLog.append(spark, b, events.filter(col("event_id") % 2 =!= 0), "user_id", P)
+    val n = events.count()
+    val cap = math.max(1L, n / 8)
+    val union = capped(a, cap).unionByName(capped(b, cap))
+
+    val batches = drainMonitored("lag_two_logs", union)
+    assert(batches.length >= 3, s"a capped union must drain in several batches: $batches")
+    // after the first batch each log still owes rows, so the sum exceeds either log's share
+    assert(batches.head.lagRows.exists(_ > n / 2), s"first batch lag ${batches.head.lagRows} of $n")
+    assert(batches.last.lagRows.contains(0L))
+    assertExactLag(batches, n)
   }
 }
